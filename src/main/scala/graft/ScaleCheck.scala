@@ -151,23 +151,6 @@ object ScaleCheck {
           "def transform(record, emitter, context):\n" +
             "    emitter.emit({'doc_id': record['doc_id'], 'n': len(record['text'])})\n").out.count()
       },
-      // the same transform FORCED onto the JSON-frame protocol: the
-      // arrow-vs-json A/B that prices the wire codec (arrow is
-      // negotiated by default whenever pyarrow imports in the worker;
-      // this entry is the fallback's cost, the pair's ratio the
-      // protocol win)
-      t("xf_pyscript_json") {
-        val out = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.IntegerType)))
-        graft.transform.ProcessScriptTransform.python(
-          docs.select(col("doc_id"), col("text")), out,
-          "def transform(record, emitter, context):\n" +
-            "    emitter.emit({'doc_id': record['doc_id'], 'n': len(record['text'])})\n",
-          arrow = false).out.count()
-      },
       // the schema-driven BINARY/timestamp wire codec on that path:
       // base64 + ISO-8601 conversion per record both directions
       t("xf_pybytes") {
@@ -399,7 +382,7 @@ object ScaleCheck {
       // stay linear in corpus tokens and the collect must stay vocab-
       // sized (docgen vocab is fixed, so this rehearses the corpus-scan
       // half; the unbounded-vocab fallback path is broadcastDf=false)
-      t("tx_tfidf_fused")(TextAnalysis.tfidf(docs, fused = true).count()),
+      t("tx_tfidf_fused")(TextAnalysis.tfidf(docs).count()),
       // BM25 retrieval at corpus scale, PRODUCTION shape: a FIXED
       // caller-bounded query table (20 queries x 3 top-tf terms derived
       // once from the first 2020 doc ids — constant however large the

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -25,6 +26,16 @@ object Util {
       if (found != null) found else p
     }
   }
+
+  /** Parallelism floor: repartition `df` up to `n` partitions only when
+    * it plans FEWER (n <= 0 = off). A narrow local parquet scan yields
+    * 1-3 row-group-bounded splits, which serializes per-row script or
+    * kernel work on one task of a many-core host; that work dominates
+    * the slim input shuffle. At deployment scale the scan already plans
+    * more partitions than cores and this is a no-op, so no exchange is
+    * added where the data is large. */
+  def partitionFloor(df: DataFrame, n: Int): DataFrame =
+    if (n > 0 && df.rdd.getNumPartitions < n) df.repartition(n) else df
 
   /** Every node of an executed plan, descending through the AQE wrappers
     * (AdaptiveSparkPlanExec / QueryStageExec) that hide finalized

@@ -136,29 +136,6 @@ object Dedup {
       |  (SELECT md5(text) FROM documents WHERE doc_id < 200)
       |ORDER BY doc_id""".stripMargin
 
-  /** Parallelism floor for the per-row text-kernel passes (md5 shingle
-    * hashing, minhash signatures): when the input plans FEWER partitions
-    * than the cluster's cores, repartition up so the kernel stage uses
-    * them — a row-group-bounded local scan otherwise serializes multi-
-    * second kernel work on one task (r16 probes: dd_threshold_hist's
-    * shingle pass 1.86 s on 1 task at local[32]). The kernel cost
-    * dominates the slim (doc_id, text) input shuffle at any scale, and
-    * at deployment scale the scan already has more partitions than
-    * cores, making this a no-op — the ScriptTransform/python()
-    * parallelism-floor argument. `graft.kernelFloor=false` disables.
-    * Applied ONLY where the alternating A/B won: the ngramJaccard
-    * shingle pass (on 2.44-3.00 s vs off 3.21-4.05 s). The same floor
-    * on contamination/bandKeysKernel LOST ~30% (cheaper kernels — the
-    * exchange cost exceeded the parallelization gain) and was
-    * reverted. */
-  private def kernelFloor(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val on = spark.conf.getOption("graft.kernelFloor").forall(_.toBoolean)
-    if (on && docs.rdd.getNumPartitions < target) docs.repartition(target)
-    else docs
-  }
-
   /** Tall (doc_id, shingle) with distinct word-3-gram shingles.
     *
     * Built entirely from native expressions — `arrays_zip` of the token
@@ -859,7 +836,12 @@ object Dedup {
     // sizes aggregate (another corpus-keyed exchange) into a projection
     // too. Docs with <3 words produce a NULL shingle array (kernel
     // contract) and are filtered exactly as they had no tall rows before.
-    val hs = kernelFloor(docs).select(col("doc_id"),
+    // The shingle kernel gets a parallelism floor (r16 A/B: 2.44-3.00 s
+    // with it vs 3.21-4.05 s without); the same floor on the cheaper
+    // contamination/bandKeys kernels LOST ~30% and is not applied there.
+    val hs = graft.core.Util.partitionFloor(docs,
+        docs.sparkSession.sparkContext.defaultParallelism)
+      .select(col("doc_id"),
         array_distinct(org.apache.spark.sql.graft.VectorExprs
           .shingle3Md5Long(col("text"), 1, 15)).as("_hs"))
       .filter(col("_hs").isNotNull)
@@ -1961,53 +1943,14 @@ object Dedup {
           b.select(col("doc_id"), col("text")).withColumn("_side", lit(1))),
       inA = col("_side") === 0, inB = col("_side") === 1)
 
-  /** dd_overlap can read its scan with a PER-OPERATOR split size
-    * (`graft.overlap.splitBytes`), scoped through a child session
-    * sharing the SparkContext so no global default moves. Rationale:
-    * the operator is one map-heavy kernel pass; at local[32] a
-    * replicated corpus arrives as ~cores-many splits (one wave), so a
-    * straggling split idles 31 threads — the r14 PLANS sweep measured
-    * 1.74 s at 8m vs 1.99 s at the 128m default on that host's x100
-    * tier. The r15 re-measure could NOT reproduce the win on this
-    * host (paired solo A/B 3.99 s at 8m vs 4.22 s at 128m — inside the
-    * noise band; suite-context 2.79-2.82 s either way), so per the r14
-    * verdict's own criterion ("a documented waiver ... if the option
-    * moves nothing on a quiet host") the DEFAULT stays at the session
-    * split size and the knob remains for deployments whose wave math
-    * differs. The operator's over-2x heavy ratio is the adjudicated
-    * kernel floor: the mandated-md5 occurrence-hash kernel alone is
-    * ~92% of DuckDB's whole in-process query (r14 Probe overlap-floor
-    * decomposition), and the remainder is the distribution exchange. */
-  /** Child sessions scoped to a non-default split size, cached per
-    * (parent, splitBytes): a newSession per invocation accumulated in
-    * the context's session registry under repeated bench reps /
-    * streaming reuse (r15 audit note). Sessions live for the parent
-    * context's life; the map is bounded by distinct splitBytes values. */
-  private val overlapSessions =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), SparkSession]
-
-  def ddOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val parentSplit =
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    val splitBytes = spark.conf.getOption("graft.overlap.splitBytes")
-      .getOrElse(parentSplit)
-    val s2 =
-      if (splitBytes == parentSplit) spark // default: no child session at all
-      else overlapSessions.computeIfAbsent((spark, splitBytes), _ => {
-        val s = spark.newSession()
-        // child sessions inherit builder-time confs; copy the load-bearing
-        // runtime ones too in case the hosting session was tuned post-build
-        Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
-            "spark.sql.adaptive.skewJoin.enabled", "spark.sql.session.timeZone",
-            "spark.sql.legacy.parquet.nanosAsLong")
-          .foreach(k => spark.conf.getOption(k).foreach(s.conf.set(k, _)))
-        s.conf.set("spark.sql.files.maxPartitionBytes", splitBytes)
-        s
-      })
-    snapshotOverlap(Tables.documents(s2, dir),
+  /** The operator's over-2x heavy ratio is the adjudicated kernel floor:
+    * the mandated-md5 occurrence-hash kernel alone is ~92% of DuckDB's
+    * whole in-process query (r14 Probe overlap-floor decomposition), and
+    * the remainder is the distribution exchange. */
+  def ddOverlap(spark: SparkSession, dir: String): DataFrame =
+    snapshotOverlap(Tables.documents(spark, dir),
       inA = pmod(col("doc_id"), lit(2)) === 0,
       inB = pmod(col("doc_id"), lit(2)) === 1)
-  }
 
   val ddOverlapSql: String = {
     val k = 16

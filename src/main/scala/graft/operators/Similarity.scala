@@ -337,11 +337,7 @@ object Similarity {
     // materialization is bounded at any corpus size (guide §3.3 — the
     // r15 no-action note rejected a CORPUS-sized checkpoint; this is the
     // bounded side).
-    val truth0 = bruteTopK(emb, isQ, k = 10)
-    val truth =
-      if (spark.conf.getOption("graft.recallEval.checkpoint")
-            .forall(_.toBoolean)) truth0.localCheckpoint(false)
-      else truth0
+    val truth = bruteTopK(emb, isQ, k = 10).localCheckpoint(false)
     recallEval(lshTopK(emb, isQ, k = 10), truth)
       .withColumn("method", lit("lsh1"))
       .unionByName(
@@ -517,11 +513,8 @@ object Similarity {
     // the SCAN's split count — a single ~30 MB parquet file arrives as
     // one partition and serializes the whole corpus pass onto one core
     // (measured: the 1.5 s single-task stage dominating the sf0.1 run).
-    // Spread only when the scan has fewer splits than cores; at cluster
-    // scale inputs arrive with thousands of splits and this branch is a
-    // no-op, so no corpus exchange is added where it matters.
-    val par = emb.sparkSession.sparkContext.defaultParallelism
-    val spread = if (emb.rdd.getNumPartitions < par) emb.repartition(par) else emb
+    val spread = graft.core.Util.partitionFloor(emb,
+      emb.sparkSession.sparkContext.defaultParallelism)
     val all = normed(spread)
     // one per-row kernel call for all nTables bucket ids: the expanded
     // 144-dot expression tree outgrew codegen and fell back to ~500 µs/

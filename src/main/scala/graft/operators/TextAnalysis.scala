@@ -579,28 +579,21 @@ object TextAnalysis {
     * score is tf·(1/df) — order-equivalent per doc to classic tf·idf
     * (log is monotone in 1/df) while staying a single IEEE division, so
     * both engines rank identically bit-for-bit; ln(N/df) would drag
-    * libm's last-ulp drift into the oracle. Shuffle shape at 100 TB:
-    * (doc, term) tf with map-side combine, a vocabulary-sized df table
-    * (AQE-broadcast into the join), one doc-keyed window. */
-  /** @param broadcastDf true (default): the vocabulary-sized df table is
-    *   BROADCAST back onto the tf stream, so no corpus-token rows ever
-    *   cross an exchange before the WindowGroupLimit-pruned per-doc
-    *   top-k (≤k rows/doc/partition) — each doc's tokens are emitted in
-    *   the doc's own scan partition. Vocabulary grows sublinearly in
-    *   corpus size (Heaps' law), so word-level df fits a broadcast far
-    *   past this benchmark's scale; the tf side pays a second termCounts
-    *   parse (one branch per consumer), measurably cheaper than shipping
-    *   every token's string through a th-keyed exchange (x100: 1.6 s
-    *   broadcast vs 3.3 s single-pass window vs 3.4 s shuffle_hash).
+    * libm's last-ulp drift into the oracle.
+    *
+    * @param broadcastDf true (default): the fused serve
+    *   ([[tfidfFused]]) — the vocabulary-sized df table collects into a
+    *   broadcast map and one per-doc pass scores and selects the top k.
+    *   Vocabulary grows sublinearly in corpus size (Heaps' law), so
+    *   word-level df fits a broadcast far past this benchmark's scale.
     *   false: unbounded-vocab corpora (e.g. terms = shingles/URLs, or
     *   df alone exceeding executor memory) take the scale-safe
     *   single-pass formulation — df as count().over(partitionBy(th)),
     *   one corpus-token exchange keyed on the radix-sortable long hash,
     *   no join, nothing vocabulary-bounded. Both paths are bit-identical
     *   (spec-pinned). */
-  def tfidf(docs: DataFrame, k: Int = 3, broadcastDf: Boolean = true,
-            fused: Boolean = false): DataFrame = {
-    if (fused) return tfidfFused(docs, k)
+  def tfidf(docs: DataFrame, k: Int = 3, broadcastDf: Boolean = true): DataFrame = {
+    if (broadcastDf) return tfidfFused(docs, k)
     // tf is a PER-ROW computation (a document is one row): the native
     // termCounts kernel builds each doc's term histogram in one string
     // pass, so no corpus-wide groupBy(doc_id, term) shuffle exists at
@@ -613,36 +606,19 @@ object TextAnalysis {
       .withColumn("th", xxhash64(col("term")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("score").desc, col("term"))
-    val scored =
-      if (broadcastDf) {
-        // df's exchange is vocab-sized (map-side combine collapses each
-        // partition's tokens to its local vocab before the wire). The df
-        // branch never needs term STRINGS or tf counts — the
-        // distinctTermHashes kernel emits just the per-doc distinct
-        // xxhash64 longs (bit-identical to xxhash64 over termCounts'
-        // terms, spec-pinned), skipping the struct/slice materialization
-        // the second termCounts parse paid.
-        val df = docs.select(explode(
-            org.apache.spark.sql.graft.VectorExprs
-              .distinctTermHashes(col("text"))).as("th"))
-          .groupBy(col("th")).agg(count(lit(1)).as("df"))
-        tf.join(broadcast(df), Seq("th"))
-      } else {
-        tf.withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("th"))))
-      }
-    scored
+    tf.withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("th"))))
       .withColumn("score", col("tf").cast(DoubleType) / col("df").cast(DoubleType))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank"), col("term"), col("tf"), col("df"), col("score"))
   }
 
-  /** Fully-fused tfidf serve: the broadcast-df plan above still paid,
-    * per token OCCURRENCE, an exploded UnsafeRow, a join probe, and the
-    * WindowGroupLimit sort machinery — only to keep ≤k rows/doc that the
-    * originating document could have selected itself. This path is the
-    * lmScore broadcast-model shape end-to-end: the vocab-sized df table
+  /** Fully-fused tfidf serve: a declarative broadcast-join plan would
+    * pay, per token OCCURRENCE, an exploded UnsafeRow, a join probe, and
+    * the WindowGroupLimit sort machinery — only to keep ≤k rows/doc that
+    * the originating document could have selected itself. This path is
+    * the lmScore broadcast-model shape end-to-end: the vocab-sized df table
     * (same distinctTermHashes aggregate) collects into a primitive
     * long→long map ONCE per job (Heaps' law bounds word vocab far past
     * corpus scale — the documented [[tfidf]] broadcastDf contract; the
@@ -652,7 +628,7 @@ object TextAnalysis {
     * probe per DISTINCT term, and insertion-selects the top k in place.
     * No explode, no join, no window exchange: the only corpus-side
     * shuffle left is the caller's output orderBy. Bit-equal to the
-    * declarative paths (spec-pinned): same tf (string-keyed histogram),
+    * window form (spec-pinned): same tf (string-keyed histogram),
     * same th = xxhash64(term bytes), same IEEE tf/df division, same
     * (score DESC, term ASC) total order — UTF8String.compareTo is the
     * byte-wise order StringType sorts use.
@@ -779,7 +755,7 @@ object TextAnalysis {
   }
 
   def txTfidf(spark: SparkSession, dir: String): DataFrame =
-    tfidf(Tables.documents(spark, dir), fused = true)
+    tfidf(Tables.documents(spark, dir))
       .orderBy(col("doc_id"), col("rank"))
 
   /** Lexical retrieval: BM25 top-k over the corpus — the search half a
@@ -920,8 +896,6 @@ object TextAnalysis {
     // exchange: the only corpus-side shuffle left is the top-k window.
     // Over either gate the shuffled-join plan below remains the
     // unbounded fallback (spec-pinned bit-equal).
-    val fuse = conf.getOption("graft.bm25.fusedServe")
-      .map(_.toBoolean).getOrElse(true)
     // overlap the fused build's independent driver jobs with the df
     // gate-count scan (§2.6): qt is under its OWN counted gate here, so
     // its collect is memory-safe regardless of the df gate's outcome;
@@ -929,14 +903,14 @@ object TextAnalysis {
     // rare unbounded-vocab fallback path
     var qtPre: scala.concurrent.Future[Array[org.apache.spark.sql.Row]] = null
     var stPre: scala.concurrent.Future[org.apache.spark.sql.Row] = null
-    if (fuse && nQt <= maxQt && nDfOverride.isEmpty) {
+    if (nQt <= maxQt && nDfOverride.isEmpty) {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
       qtPre = scala.concurrent.Future(qt.collect())
       stPre = scala.concurrent.Future(stats.first())
     }
     val nDf = nDfOverride.getOrElse(dfTab.count())
-    if (fuse && nQt <= maxQt && nDf <= maxDf)
+    if (nQt <= maxQt && nDf <= maxDf)
       return bm25FusedServe(docs, external, topk, qt, dfTab, stats,
         Option(qtPre), Option(stPre))
     val qtGated = if (nQt <= maxQt) broadcast(qt) else qt
@@ -3585,14 +3559,8 @@ object TextAnalysis {
                     charBudget: Long = 20000L, nShards: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
-    // r15 landed these checkpoints on a plan argument (32 scans -> 4)
-    // but could not prove the wall win under that round's host load;
-    // conf-gated so both paths stay measurable (the runningTotal
-    // pattern), default set by this round's quiet paired A/B
-    val ckpt = spark.conf.getOption("graft.curationIncr.checkpoint")
-      .map(_.toBoolean).getOrElse(true)
-    def cp(df: DataFrame): DataFrame =
-      if (ckpt) df.localCheckpoint(false) else df
+    // lazy checkpoints on the fanned-out slim tables (32 scans -> 4;
+    // won every quiet paired A/B against recomputation)
     def keepMin(df: DataFrame): DataFrame = df
       .withColumn("_keep", min(col("doc_id")).over(Window.partitionBy(col("h"))))
       .filter(col("doc_id") === col("_keep")).drop("_keep")
@@ -3603,7 +3571,7 @@ object TextAnalysis {
     // scan+md5+keep-min pipeline re-executes per reference (32 parquet
     // scans in the r15 before-plan). Slim rows only; text never
     // materializes.
-    val hist = cp(keepMin(slim))
+    val hist = keepMin(slim).localCheckpoint(false)
     // the arriving batch: docs with id%10==2 re-keyed; id%20==2 keeps its
     // text verbatim (a content-dup of the snapshot), the rest append a
     // unique suffix (new content)
@@ -3620,8 +3588,8 @@ object TextAnalysis {
         .select(col("doc_id"), col("lang"), col("n_chars"))
     // each selection table is read twice (export+retract / mark+retract):
     // checkpoint both so the two-pass budget prefix sum runs once each
-    val selM = cp(budget(merged))
-    val selH = cp(budget(hist))
+    val selM = budget(merged).localCheckpoint(false)
+    val selH = budget(hist).localCheckpoint(false)
     val exported = Sampling.shuffleExport(selM, col("doc_id"), nShards)
     val marked = exported
       .join(selH.select(col("doc_id").as("_pid")),

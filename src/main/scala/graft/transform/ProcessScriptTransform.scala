@@ -102,10 +102,8 @@ object ProcessScriptTransform {
     *    carries +2-5 s of fixed cost (imports + conversion setup), so
     *    JSON dominates at every tested scale up to 250k rows/partition
     *    — the earlier "3x at scale" reading did not reproduce under
-    *    paired A/B. Default: do not offer arrow (no peek, no import);
-    *    `graft.pyscript.arrowPlainMinRows` > 0 re-enables the same
-    *    peek gate at that row count for deployments whose profile
-    *    differs. */
+    *    paired A/B. Plain schemas never offer arrow (no peek, no
+    *    import). */
   private[transform] val ArrowMinRowsDefault = 65536
   private[transform] val ArrowMinBytesDefault = 32L * 1024 * 1024
 
@@ -233,7 +231,16 @@ object ProcessScriptTransform {
       throw new IllegalArgumentException(s"invalid transform script: $err")
   }
 
-  /** @param env extra environment variables for every spawned worker
+  /** Worker stderr lines kept for a worker failure's message: the
+    * traceback of a script that dies outside `transform` (at import,
+    * on a bad init) is the failure's cause. */
+  private[transform] val StderrTailLines = 20
+
+  /** @param parallelism floor on the worker stage's task count
+    *   ([[graft.core.Util.partitionFloor]]; 0 = off): a narrow parquet
+    *   scan often yields 1-2 partitions = 1-2 workers, and the shuffle
+    *   of input rows is cheap next to interpreting them.
+    * @param env extra environment variables for every spawned worker
     *   interpreter (and the configure-time validator) — the reference's
     *   PYTHONPATH passthrough for user libraries (ref:
     *   Py4jPythonExecutor.java:68,149 sets PYTHONPATH so the evaluator
@@ -248,8 +255,7 @@ object ProcessScriptTransform {
              onError: ScriptTransform.ErrorPolicy = ScriptTransform.FailFast,
              pythonExec: String = "python3",
              parallelism: Int = 0,
-             env: Map[String, String] = Map.empty,
-             arrow: Boolean = true): TransformResult = {
+             env: Map[String, String] = Map.empty): TransformResult = {
     validate(script, pythonExec, env) // fail at configure time, not per task
     // torrent-broadcast once per executor (like the Scala path's
     // ScriptContext), not serialized into every task closure; no
@@ -258,21 +264,10 @@ object ProcessScriptTransform {
     val bcLookups =
       if (lookups.isEmpty) null
       else df.sparkSession.sparkContext.broadcast(lookups)
-    // a narrow parquet scan often yields 1-2 partitions = 1-2 workers;
-    // parallelism > 0 repartitions so the python stage uses the cluster
-    // (the shuffle of input rows is cheap next to interpreting them)
-    val in = if (parallelism > 0) df.repartition(parallelism) else df
+    val in = graft.core.Util.partitionFloor(df, parallelism)
     val inSchema = in.schema
-    val errSchema = StructType(
-      StructField("errorCode", IntegerType) ::
-      StructField("errorMsg", StringType) :: inSchema.fields.toList)
-    val taggedSchema = StructType(Seq(
-      StructField("_tag", StringType, nullable = false),
-      StructField("_out", outSchema),
-      StructField("_err", errSchema),
-      StructField("_alert", MapType(StringType, StringType))))
+    val channels = new TaggedChannels(inSchema, outSchema)
     val worker = workerSource
-    val inFields = inSchema.fields
     // wire-type descriptors: null (and zero per-record cost) unless the
     // schema actually carries binary/datetime somewhere
     val inDesc = WireCodec.descriptor(inSchema)
@@ -283,17 +278,13 @@ object ProcessScriptTransform {
     // answer (pyarrow importable) per partition
     val sessConf = df.sparkSession.conf
     // schema-shape split (see ArrowMinRowsDefault): arrow's measured win
-    // is the wire codec it removes — plain str/num schemas stay on JSON
-    // unless a deployment opts in
+    // is the wire codec it removes — plain str/num schemas speak JSON
     val codecHeavy = inDesc != null || outDesc != null
-    val arrowMinRows =
-      if (codecHeavy) sessConf.getOption("graft.pyscript.arrowMinRows")
-        .map(_.toInt).getOrElse(ArrowMinRowsDefault)
-      else sessConf.getOption("graft.pyscript.arrowPlainMinRows")
-        .map(_.toInt).getOrElse(Int.MaxValue)
+    val arrowMinRows = sessConf.getOption("graft.pyscript.arrowMinRows")
+      .map(_.toInt).getOrElse(ArrowMinRowsDefault)
     val arrowMinBytes = sessConf.getOption("graft.pyscript.arrowMinBytes")
       .map(_.toLong).getOrElse(ArrowMinBytesDefault)
-    val offerArrowStatic = arrow && arrowMinRows != Int.MaxValue &&
+    val offerArrowStatic = codecHeavy &&
       ArrowPipe.supported(inSchema) && ArrowPipe.supported(outSchema)
 
     val tagged = in.mapPartitions { rows0 =>
@@ -307,7 +298,7 @@ object ProcessScriptTransform {
         var offerArrow = offerArrowStatic
         var rows: Iterator[Row] = rows0
         if (offerArrowStatic && arrowMinRows > 0) {
-          val nf = inFields.length
+          val nf = inSchema.length
           val buf = new java.util.ArrayList[Row](
             math.min(arrowMinRows, ArrowBatchSize))
           var bytes = 0L
@@ -330,12 +321,21 @@ object ProcessScriptTransform {
         val pb = new ProcessBuilder(pythonExec, "-c", worker)
         env.foreach { case (k, v) => pb.environment().put(k, v) }
         val proc = pb.start()
-        // stderr (script logger output, tracebacks) → executor log
+        // stderr (script logger output, tracebacks) → executor log; the
+        // last StderrTailLines lines also ride a worker failure's message
+        val errTail = new java.util.ArrayDeque[String](StderrTailLines)
         val drain = new Thread(() => {
           val r = new BufferedReader(new InputStreamReader(
             proc.getErrorStream, StandardCharsets.UTF_8))
           var l = r.readLine()
-          while (l != null) { System.err.println(s"[graft.pyscript] $l"); l = r.readLine() }
+          while (l != null) {
+            System.err.println(s"[graft.pyscript] $l")
+            errTail.synchronized {
+              if (errTail.size == StderrTailLines) errTail.poll()
+              errTail.add(l)
+            }
+            l = r.readLine()
+          }
         }, "graft-pyscript-stderr")
         drain.setDaemon(true)
         drain.start()
@@ -484,20 +484,6 @@ object ProcessScriptTransform {
         })
         writer.start()
 
-        def errRow(code: Int, msg: String, bad: Map[String, Any]): Row = {
-          val values = new Array[Any](inFields.length + 2)
-          values(0) = code
-          values(1) = msg
-          var i = 0
-          while (i < inFields.length) {
-            values(i + 2) = SchemaCodec.encode(
-              bad.getOrElse(inFields(i).name, null), inFields(i).dataType)
-            i += 1
-          }
-          Row("err", null,
-            new org.apache.spark.sql.catalyst.expressions.GenericRow(values), null)
-        }
-
         // responses arrive in record order (the worker is sequential);
         // "d"/"f" markers advance the pending queue so "f" can name the
         // record that failed
@@ -505,10 +491,21 @@ object ProcessScriptTransform {
           private var nextRow: Row = null
           private var finished = false
           private def fail(why: String): Nothing = {
+            // a dead worker's traceback names the cause: let the drain
+            // read stderr to EOF, then append its tail
+            drain.join(2000)
+            val tail = errTail.synchronized(errTail.toArray.mkString("\n"))
+            val stderr = if (tail.isEmpty) "" else s"\nworker stderr:\n$tail"
             val cause = writerError.get()
             if (cause != null) throw new IllegalStateException(
-              s"python worker input stream failed: $cause", cause)
-            throw new IllegalStateException(why)
+              s"python worker input stream failed: $cause$stderr", cause)
+            throw new IllegalStateException(why + stderr)
+          }
+          private def died(): Nothing = {
+            // stdout EOF can beat the exit status by a moment
+            val exit = if (proc.waitFor(2, java.util.concurrent.TimeUnit.SECONDS))
+              proc.exitValue().toString else "alive"
+            fail(s"python worker died (exit=$exit)")
           }
           // decoded output rows of the current arrow frame (arrow mode)
           private val rowQ = new java.util.ArrayDeque[Array[Any]]()
@@ -545,8 +542,7 @@ object ProcessScriptTransform {
           private def readTop(): Unit = {
             if (arrowMode) {
               val fr = ArrowPipe.readFrame(rawIn)
-              if (fr == null) fail(
-                s"python worker died (exit=${if (proc.isAlive) "alive" else proc.exitValue()})")
+              if (fr == null) died()
               if (fr._1 == 'A'.toByte) {
                 val rows = ArrowPipe.readBatch(fr._2, outSchema, readAllocator)
                 var i = 0
@@ -561,8 +557,7 @@ object ProcessScriptTransform {
               }
             } else {
               val line = stdout.readLine()
-              if (line == null) fail(
-                s"python worker died (exit=${if (proc.isAlive) "alive" else proc.exitValue()})")
+              if (line == null) died()
               val top = mapper.readValue(line, classOf[java.util.Map[String, Object]])
               if (top.get("t").asInstanceOf[String] == "bb")
                 top.get("d").asInstanceOf[java.util.List[Object]].forEach(
@@ -573,9 +568,9 @@ object ProcessScriptTransform {
           private def advance(): Unit = {
             while (nextRow == null && !finished) {
               if (!rowQ.isEmpty) {
-                nextRow = Row("out",
+                nextRow = channels.out(
                   new org.apache.spark.sql.catalyst.expressions.GenericRow(
-                    rowQ.poll()), null, null)
+                    rowQ.poll()))
               } else if (frameQ.isEmpty) {
                 readTop()
               } else {
@@ -583,21 +578,21 @@ object ProcessScriptTransform {
                 msg.get("t").asInstanceOf[String] match {
                 case "e" =>
                   val raw = JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
-                  nextRow = Row("out", SchemaCodec.mapToRow(
+                  nextRow = channels.out(SchemaCodec.mapToRow(
                     if (outDesc == null) raw
                     else WireCodec.mapFromWire(raw, outSchema),
-                    outSchema), null, null)
+                    outSchema))
                 case "r" =>
                   val e = JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
                   val badRaw = e.getOrElse("invalidRecord", Map.empty[String, Any])
                     .asInstanceOf[Map[String, Any]]
-                  nextRow = errRow(
+                  nextRow = channels.error(
                     e.getOrElse("errorCode", 0).asInstanceOf[Number].intValue(),
                     String.valueOf(e.getOrElse("errorMsg", "")),
                     if (inDesc == null) badRaw
                     else WireCodec.mapFromWire(badRaw, inSchema))
                 case "a" =>
-                  nextRow = Row("alert", null, null,
+                  nextRow = channels.alert(
                     JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
                       .map { case (k, v) => k -> String.valueOf(v) })
                 case "d" =>
@@ -621,7 +616,7 @@ object ProcessScriptTransform {
                     case ScriptTransform.FailFast =>
                       throw new RuntimeException(s"python transform failed: $err")
                     case ScriptTransform.RouteToErrors(code) =>
-                      nextRow = errRow(code, err,
+                      nextRow = channels.error(code, err,
                         if (bad == null) Map.empty else bad)
                   }
                 case "m" =>
@@ -646,9 +641,9 @@ object ProcessScriptTransform {
           }
         }
       }
-    }(Encoders.row(taggedSchema))
+    }(Encoders.row(channels.schema))
 
-    TransformResult(tagged.toDF(), outSchema, errSchema)
+    channels.result(tagged.toDF())
   }
 
   /** The worker harness, Python stdlib only. Mirrors the reference's

@@ -2,10 +2,12 @@ package graft.transform
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
+
+import graft.core.Util
 
 /** Per-stage named counters, the equivalent of the reference's
   * `context.getMetrics().count(name, n)` (ref: ScriptContext /
@@ -59,7 +61,8 @@ final class ScriptLogger private[transform] (metrics: Metrics) extends Serializa
   * ScriptContext — logger, metrics, arguments, lookup; the reference
   * *declares* lookup but throws UnsupportedOperation — Graft supports
   * it). Lookup datasets are torrent-broadcast once per job, not
-  * serialized into every task. */
+  * serialized into every task; `lookups` is null when the transform has
+  * none. */
 final class ScriptContext(
     val arguments: Map[String, String],
     val metrics: Metrics,
@@ -68,7 +71,8 @@ final class ScriptContext(
   val logger: ScriptLogger = new ScriptLogger(metrics)
   /** Value for `key` in the named lookup dataset, or null. */
   def lookup(dataset: String, key: Any): Any =
-    lookups.value.get(dataset).flatMap(_.get(String.valueOf(key))).orNull
+    if (lookups == null) null
+    else lookups.value.get(dataset).flatMap(_.get(String.valueOf(key))).orNull
 }
 
 /** The reference's emitter surface (ref: PythonEvaluator.java:186-204):
@@ -97,6 +101,43 @@ final case class TransformResult(tagged: DataFrame, outSchema: StructType,
   def cached(): TransformResult = { tagged.persist(); this }
 }
 
+/** The tagged channel format both script hosts ([[ScriptTransform]] and
+  * [[ProcessScriptTransform.python]]) emit: one row per emit, `_tag`
+  * naming the channel and exactly one of `_out` / `_err` / `_alert` set.
+  * An error row is (errorCode, errorMsg, every input field), the input
+  * record re-encoded under the input schema. */
+private[transform] final class TaggedChannels(inSchema: StructType,
+    outSchema: StructType) extends Serializable {
+  private val inFields = inSchema.fields
+  val errSchema: StructType = StructType(
+    StructField("errorCode", IntegerType) ::
+    StructField("errorMsg", StringType) :: inFields.toList)
+  val schema: StructType = StructType(Seq(
+    StructField("_tag", StringType, nullable = false),
+    StructField("_out", outSchema),
+    StructField("_err", errSchema),
+    StructField("_alert", MapType(StringType, StringType))))
+
+  def out(row: Row): Row = Row("out", row, null, null)
+  def error(code: Int, msg: String, bad: Map[String, Any]): Row = {
+    val values = new Array[Any](inFields.length + 2)
+    values(0) = code
+    values(1) = msg
+    var i = 0
+    while (i < inFields.length) {
+      values(i + 2) = SchemaCodec.encode(
+        bad.getOrElse(inFields(i).name, null), inFields(i).dataType)
+      i += 1
+    }
+    Row("err", null,
+      new org.apache.spark.sql.catalyst.expressions.GenericRow(values), null)
+  }
+  def alert(payload: Map[String, String]): Row = Row("alert", null, null, payload)
+
+  def result(tagged: DataFrame): TransformResult =
+    TransformResult(tagged, outSchema, errSchema)
+}
+
 /** Imperative record-at-a-time transform — the engine's fully-general path,
   * equivalent to the reference's Native execution mode (out-of-process
   * script, ref: Py4jPythonExecutor.java) re-expressed as a distributed
@@ -117,15 +158,10 @@ object ScriptTransform {
     * with full context instead of poisoning a 100 TB job. */
   final case class RouteToErrors(errorCode: Int = 500) extends ErrorPolicy
 
-  /** @param parallelism floor on the script stage's task count: when > 0
-    *   and the input plans FEWER partitions, repartition up to it — a
-    *   narrow parquet scan at small scale yields 1-3 splits (row-group
-    *   bounded), which serializes the per-record closure work on a
-    *   32-core host (measured: xf_script's 1.24 s script stage ran 3
-    *   tasks). Floor semantics keep it scale-safe: at deployment scale
-    *   the scan already has more partitions than cores and this is a
-    *   no-op — the interpreter-cost-dominates-input-shuffle argument is
-    *   the [[ProcessScriptTransform.python]] precedent. */
+  /** @param parallelism floor on the script stage's task count
+    *   ([[graft.core.Util.partitionFloor]]; 0 = off), the same meaning
+    *   as on [[ProcessScriptTransform.python]] — measured: without it
+    *   xf_script's 1.24 s script stage ran 3 tasks on a 32-core host. */
   def apply(df: DataFrame, outSchema: StructType,
             arguments: Map[String, String] = Map.empty,
             metrics: Metrics = Metrics.none,
@@ -133,118 +169,72 @@ object ScriptTransform {
             onError: ErrorPolicy = FailFast,
             parallelism: Int = 0)
            (fn: (Map[String, Any], Emitter, ScriptContext) => Unit): TransformResult = {
-    val in0 = df
-    val df1 =
-      if (parallelism > 0 && in0.rdd.getNumPartitions < parallelism)
-        in0.repartition(parallelism)
-      else in0
-    val inSchema = df1.schema
-    val errSchema = StructType(
-      StructField("errorCode", IntegerType) ::
-      StructField("errorMsg", StringType) :: inSchema.fields.toList)
-    val taggedSchema = StructType(Seq(
-      StructField("_tag", StringType, nullable = false),
-      StructField("_out", outSchema),
-      StructField("_err", errSchema),
-      StructField("_alert", MapType(StringType, StringType))))
+    val in = Util.partitionFloor(df, parallelism)
+    val inSchema = in.schema
+    val channels = new TaggedChannels(inSchema, outSchema)
+    // no broadcast block at all in the common no-lookups case (a
+    // broadcast per call lives until the SparkContext dies)
     val ctx = new ScriptContext(arguments, metrics,
-      df.sparkSession.sparkContext.broadcast(lookups))
+      if (lookups.isEmpty) null else df.sparkSession.sparkContext.broadcast(lookups))
 
-    val inFields = inSchema.fields
     // lazy per-row view: decoding happens only for the fields the user
     // closure actually reads (measured ~25% on wide-input transforms)
     val rowMapper = new SchemaCodec.RowMapper(inSchema)
 
-    // one record's worth of script execution: identical on both paths
-    // below — the paths differ ONLY in how the input Row is produced and
-    // how the emitted tagged Rows leave the task
-    def runRecord(row: Row, buf: ListBuffer[Row]): Unit = {
-      val record = rowMapper(row)
-      val emitter = new Emitter {
-        def emit(r: Map[String, Any]): Unit =
-          buf += Row("out", SchemaCodec.mapToRow(r, outSchema), null, null)
-        def emitError(code: Int, msg: String, bad: Map[String, Any]): Unit = {
-          val values = new Array[Any](inFields.length + 2)
-          values(0) = code
-          values(1) = msg
-          var i = 0
-          while (i < inFields.length) {
-            values(i + 2) = SchemaCodec.encode(
-              bad.getOrElse(inFields(i).name, null), inFields(i).dataType)
-            i += 1
-          }
-          buf += Row("err", null,
-            new org.apache.spark.sql.catalyst.expressions.GenericRow(values), null)
-        }
-        def emitAlert(payload: Map[String, String]): Unit =
-          buf += Row("alert", null, null, payload)
-      }
-      try fn(record, emitter, ctx)
-      catch {
-        case e: Exception => onError match {
-          case FailFast => throw e
-          case RouteToErrors(code) =>
-            emitter.emitError(code, s"${e.getClass.getSimpleName}: ${e.getMessage}", record)
-        }
-      }
-    }
-
-    // InternalRow fast path (default; graft.script.internalRow=false is
-    // the dual-path pin): the Dataset mapPartitions boundary DESERIALIZES
-    // EVERY input column to an external Row before the closure sees it —
-    // an opaque closure defeats column pruning, so a script reading 5 of
-    // 16 lineitem columns paid 16 conversions per row. Here the task
-    // reads the compiled plan's InternalRows directly through a lazy Row
-    // view (per-field CatalystTypeConverters on ACCESS — the same
-    // external values the encoder produced, converter-for-converter),
-    // and emitted tagged rows convert once to catalyst on the way out
-    // instead of through the encoder. The record view is valid for the
+    // The task reads the compiled plan's InternalRows directly through a
+    // lazy Row view (per-field CatalystTypeConverters on ACCESS — the
+    // same external values a row encoder would produce): an opaque
+    // closure defeats column pruning, so an encoder boundary would
+    // deserialize EVERY input column per row (a script reading 5 of 16
+    // lineitem columns paid 16 conversions). Emitted tagged rows convert
+    // once to catalyst on the way out. The record view is valid for the
     // duration of the transform call, same as the reference contract —
     // the underlying (reused) UnsafeRow advances when the call returns.
-    val internal = df.sparkSession.conf
-      .getOption("graft.script.internalRow").forall(_.toBoolean)
-    val tagged: DataFrame =
-      if (internal) {
-        val inDts = inFields.map(_.dataType)
-        val taggedS = taggedSchema
-        val rdd = df1.queryExecution.toRdd.mapPartitions { irs =>
-          val convs = inDts.map(
-            org.apache.spark.sql.catalyst.CatalystTypeConverters
-              .createToScalaConverter)
-          val toCat = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(taggedS)
-          val view = new Object {
-            // one reusable lazy view per task — the script contract scopes
-            // a record to its transform call
-            var ir: org.apache.spark.sql.catalyst.InternalRow = null
-            val row: Row = new Row {
-              override def length: Int = inDts.length
-              override def get(i: Int): Any =
-                if (ir.isNullAt(i)) null else convs(i)(ir.get(i, inDts(i)))
-              override def isNullAt(i: Int): Boolean = ir.isNullAt(i)
-              override def copy(): Row = Row.fromSeq((0 until length).map(get))
-            }
-          }
-          irs.flatMap { ir0 =>
-            view.ir = ir0
-            val buf = new ListBuffer[Row]
-            runRecord(view.row, buf)
-            buf.result().map(r =>
-              toCat(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+    val inDts = inSchema.fields.map(_.dataType)
+    val taggedSchema = channels.schema
+    val rdd = in.queryExecution.toRdd.mapPartitions { irs =>
+      val convs = inDts.map(
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter)
+      val toCat = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToCatalystConverter(taggedSchema)
+      val view = new Object {
+        // one reusable lazy view per task — the script contract scopes
+        // a record to its transform call
+        var ir: org.apache.spark.sql.catalyst.InternalRow = null
+        val row: Row = new Row {
+          override def length: Int = inDts.length
+          override def get(i: Int): Any =
+            if (ir.isNullAt(i)) null else convs(i)(ir.get(i, inDts(i)))
+          override def isNullAt(i: Int): Boolean = ir.isNullAt(i)
+          override def copy(): Row = Row.fromSeq((0 until length).map(get))
+        }
+      }
+      irs.flatMap { ir0 =>
+        view.ir = ir0
+        val record = rowMapper(view.row)
+        val buf = new ListBuffer[Row]
+        val emitter = new Emitter {
+          def emit(r: Map[String, Any]): Unit =
+            buf += channels.out(SchemaCodec.mapToRow(r, outSchema))
+          def emitError(code: Int, msg: String, bad: Map[String, Any]): Unit =
+            buf += channels.error(code, msg, bad)
+          def emitAlert(payload: Map[String, String]): Unit =
+            buf += channels.alert(payload)
+        }
+        try fn(record, emitter, ctx)
+        catch {
+          case e: Exception => onError match {
+            case FailFast => throw e
+            case RouteToErrors(code) =>
+              emitter.emitError(code, s"${e.getClass.getSimpleName}: ${e.getMessage}", record)
           }
         }
-        org.apache.spark.sql.graft.InternalRowDF(
-          df1.sparkSession, taggedSchema, rdd)
-      } else {
-        df1.mapPartitions { rows =>
-          rows.flatMap { row =>
-            val buf = new ListBuffer[Row]
-            runRecord(row, buf)
-            buf.result()
-          }
-        }(Encoders.row(taggedSchema)).toDF()
+        buf.result().map(r =>
+          toCat(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
       }
-
-    TransformResult(tagged, outSchema, errSchema)
+    }
+    channels.result(org.apache.spark.sql.graft.InternalRowDF(
+      in.sparkSession, taggedSchema, rdd))
   }
 }

@@ -66,13 +66,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"unexpected pre-shuffle window limit replaced the TakeOrdered:\n$p")
   }
 
-  test("tfidf joins df against a broadcast vocab table; fallback is shuffled-hash") {
-    // round-10 shape: the vocabulary-sized df table broadcasts, so
-    // corpus tokens never cross an exchange before the group-limit
-    // prune (x100: 3.4 s -> 2.2 s over the shuffled-hash join)
-    val p = plan(graft.operators.TextAnalysis.tfidf(Tables.documents(spark, dir)))
-    assert(p.contains("BroadcastHashJoin"),
-      s"tfidf df join is not broadcast:\n$p")
+  test("tfidf fused serve: no joins, no explode; the fallback is a window count") {
+    // the vocabulary-sized df table collects into a broadcast map and
+    // one per-doc pass scores and selects the top k: the corpus never
+    // explodes into token rows and never crosses a join. The serve is a
+    // DeferredDF; its built inner frame is the real serving plan.
+    val inner = org.apache.spark.sql.graft.DeferredDF.innerFrames(
+      graft.operators.TextAnalysis.tfidf(Tables.documents(spark, dir)))
+    assert(inner.size == 1, "tfidf fused serve is not one deferred frame")
+    val p = plan(inner.head)
+    assert(!p.contains("Join"), s"tfidf fused serve grew a join:\n$p")
+    assert(!p.contains("Generate"), s"tfidf fused serve still explodes tokens:\n$p")
     // the unbounded-vocab escape hatch computes df as a window count
     // over the term-hash exchange — one shuffle, no join at all
     val pf = plan(graft.operators.TextAnalysis.tfidf(
@@ -98,44 +102,25 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"bm25 fused serve should shuffle only the top-k window:\n$p")
   }
 
-  test("bm25 fallback: query-term and df joins broadcast; no corpus-keyed join") {
-    // with the fused serve disabled, the declarative fallback must keep
-    // its shape: the corpus token stream filtered map-side by the
-    // broadcast (Q x qterms) query-term table and scored against the
-    // broadcast vocab-sized df table — a sort-merge join on either
-    // would put every token row through an exchange before the
-    // hit-bounded (q_id, doc_id) aggregate. (bm25() itself is a
-    // DeferredDF; the plan variant with forced-under overrides exposes
-    // the inner shape without running the gate counts.)
-    spark.conf.set("graft.bm25.fusedServe", "false")
-    val p = try plan(graft.operators.TextAnalysis.bm25Plan(
-        Tables.documents(spark, dir), 101, 3, 5, None, Some(0L), Some(0L)))
-      finally spark.conf.unset("graft.bm25.fusedServe")
-    assert(p.contains("BroadcastHashJoin"),
-      s"bm25 lost its broadcast joins:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"bm25 grew a sort-merge join on the corpus side:\n$p")
-  }
-
   test("bm25: query-term and vocab broadcasts gated on counted size, both paths") {
-    // UNDER the gates the qt and df joins carry broadcast hints; OVER
-    // them only the 1-row stats crossJoin keeps its hint — the forced
-    // hint on a corpus-proportional query set (|Q| = 3N/qmod) or an
-    // unbounded vocabulary must disappear so the join degrades to a
-    // shuffle instead of a driver OOM (AQE may still broadcast from
-    // RUNTIME sizes, which is safe)
+    // under BOTH gates the plan is the fused kernel (its own spec
+    // above); over a gate the join plan runs, and each of the qt and df
+    // joins carries a broadcast hint only while ITS gate holds — the 1-row
+    // stats crossJoin always keeps its hint. A forced hint on a
+    // corpus-proportional query set (|Q| = 3N/qmod) or an unbounded
+    // vocabulary must disappear so the join degrades to a shuffle
+    // instead of a driver OOM (AQE may still broadcast from RUNTIME
+    // sizes, which is safe)
     val docs = Tables.documents(spark, dir)
     def hints(p: String): Int =
       "strategy=broadcast".r.findAllIn(p).length
-    // the under-the-gate DECLARATIVE shape is the fusedServe=false
-    // fallback (under both gates the default plan is the fused kernel,
-    // asserted in its own spec above)
-    spark.conf.set("graft.bm25.fusedServe", "false")
-    val under = try graft.operators.TextAnalysis
-        .bm25Plan(docs, 101, 3, 5, None, Some(0L), Some(0L))
-        .queryExecution.optimizedPlan.toString
-      finally spark.conf.unset("graft.bm25.fusedServe")
-    assert(hints(under) >= 3, s"qt/df/stats hints missing under the gate:\n$under")
+    def hintsAt(nQt: Long, nDf: Long): String = graft.operators.TextAnalysis
+      .bm25Plan(docs, 101, 3, 5, None, Some(nQt), Some(nDf))
+      .queryExecution.optimizedPlan.toString
+    val qtOnly = hintsAt(0L, Long.MaxValue)
+    assert(hints(qtOnly) == 2, s"qt/stats hints wrong with only qt under its gate:\n$qtOnly")
+    val dfOnly = hintsAt(Long.MaxValue, 0L)
+    assert(hints(dfOnly) == 2, s"df/stats hints wrong with only df under its gate:\n$dfOnly")
     val over = graft.operators.TextAnalysis.bm25Plan(docs, 101, 3, 5, None,
       Some(Long.MaxValue), Some(Long.MaxValue))
     val overP = over.queryExecution.optimizedPlan.toString

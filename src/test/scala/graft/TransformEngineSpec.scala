@@ -81,6 +81,25 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got === Array((1, "United States"), (2, "France"), (3, "null")))
   }
 
+  test("ScriptTransform: no lookups, no broadcast; lookup answers null") {
+    // a broadcast lives until the SparkContext ends, so an empty lookup
+    // map broadcast per call would pile up; broadcast ids are sequential,
+    // so two probes one id apart prove nothing was broadcast between them
+    val sc = spark.sparkContext
+    val df = Seq(1, 2).toDF("id")
+    val out = StructType(Seq(StructField("id", IntegerType),
+                             StructField("country", StringType)))
+    val before = sc.broadcast(0)
+    val result = ScriptTransform(df, out) { (r, em, ctx) =>
+      em.emit(Map("id" -> r("id"), "country" -> ctx.lookup("countries", "US")))
+    }
+    val after = sc.broadcast(0)
+    try assert(after.id === before.id + 1,
+      "a no-lookup ScriptTransform created a broadcast")
+    finally { before.destroy(); after.destroy() }
+    assert(result.out.filter(col("country").isNull).count() === 2)
+  }
+
   test("SchemaCodec round-trips nested struct/array/map and coerces numerics") {
     val schema = StructType(Seq(
       StructField("s", StructType(Seq(
@@ -313,6 +332,24 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"unexpected failure text: $msg")
   }
 
+  test("python worker failure message carries the worker's stderr tail") {
+    val df = (1L to 5L).toDF("id").repartition(1)
+    val out = StructType(Seq(StructField("id", LongType)))
+    // passes validate (a top-level def binds transform), but the module
+    // body raises when the worker executes it: only the traceback on the
+    // worker's stderr names the cause
+    val script =
+      """def transform(record, emitter, context):
+        |    emitter.emit({"id": record["id"]})
+        |raise RuntimeError("boom at import")
+        |""".stripMargin
+    val e = intercept[org.apache.spark.SparkException] {
+      ProcessScriptTransform.python(df, out, script).out.collect()
+    }
+    val msg = e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("")
+    assert(msg.contains("boom at import"), s"failure lacks the worker's cause: $msg")
+  }
+
   test("python script validation fails at configure time with the interpreter's message") {
     val bad = intercept[IllegalArgumentException] {
       ProcessScriptTransform.validate("def transform(record, emitter context):\n    pass\n")
@@ -461,8 +498,11 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val arrow = try ProcessScriptTransform.python(in, out, script,
         metrics = m, onError = ScriptTransform.RouteToErrors(3)).cached()
       finally spark.conf.unset("graft.pyscript.arrowMinRows")
-    val json = ProcessScriptTransform.python(in, out, script,
-      onError = ScriptTransform.RouteToErrors(3), arrow = false).cached()
+    // the JSON twin runs under the default gate, which a 3-row input
+    // stays under
+    val mJson = Metrics(spark, "proto.arrow")
+    val json = ProcessScriptTransform.python(in, out, script, metrics = mJson,
+      onError = ScriptTransform.RouteToErrors(3)).cached()
     def key(rs: Array[org.apache.spark.sql.Row]) =
       rs.map(_.toSeq.map {
         case b: Array[Byte] => b.toSeq
@@ -475,6 +515,7 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // proves the arrow protocol actually engaged (workers counted it)
     assert(m.value("proto.arrow") >= 1,
       "arrow offer was not accepted by any worker")
+    assert(mJson.value("proto.arrow") === 0, "the JSON twin negotiated arrow")
     // and the values themselves are right (not merely path-consistent)
     val r1 = arrow.out.orderBy("id").collect()(0)
     assert(r1.getAs[Double]("f2") === 3.0)
@@ -485,12 +526,13 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r1.getAs[String]("tag") === "x1")
   }
 
-  test("script InternalRow fast path: bit-equal to the Row-encoder path, all channels") {
+  test("script InternalRow path: codec families and channels match pinned rows") {
     import java.sql.{Date, Timestamp}
-    // the r15-deferred direct-InternalRow emitter, pinned against the
-    // encoder path on a schema exercising every codec family: scalars,
-    // string, binary, timestamp/date, nested struct/array/map, union,
-    // enum — plus the error and alert channels under RouteToErrors
+    // the direct-InternalRow emitter on a schema exercising every codec
+    // family: scalars, string, binary, timestamp/date, nested
+    // struct/array/map, union, enum — plus the error and alert channels
+    // under RouteToErrors. The expected rows are the ones a Row-encoder
+    // mapPartitions produced for the same closure.
     val in = Seq(
       (1L, "ok", 2.5, Array[Byte](1, 2), Timestamp.valueOf("2026-01-02 03:04:05.000001"),
         Date.valueOf("2026-01-02"), Seq(1.0, 2.0), Map("k" -> 3.0)),
@@ -512,38 +554,45 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("a", LongType),
       SchemaCodec.enumField("flag", Seq("LOW", "HIGH")),
       SchemaCodec.unionField("u", Seq(LongType, StringType))))
-    def run(): (Array[String], Array[String], Array[String]) = {
-      val res = ScriptTransform(in, out,
-          onError = ScriptTransform.RouteToErrors(9)) { (r, em, ctx) =>
-        if (r("status") == "bad")
-          throw new IllegalArgumentException("bad status")
-        val info = r("info").asInstanceOf[Map[String, Any]]
-        if (r("id").asInstanceOf[Long] == 3L)
-          em.emitAlert(Map("why" -> "id3"))
-        em.emit(Map(
-          "id" -> r("id"),
-          "x2" -> r("x").asInstanceOf[Double] * 2,
-          "echo" -> r("payload"),
-          "ts" -> r("ts"), "day" -> r("day"),
-          "arr_sum" -> r("arr").asInstanceOf[Seq[Double]].sum,
-          "mk" -> r("m").asInstanceOf[Map[String, Any]].getOrElse("k", -1.0),
-          "a" -> info("a"),
-          "flag" -> (if (r("x").asInstanceOf[Double] > 1) "HIGH" else 0),
-          "u" -> (if (r("id").asInstanceOf[Long] == 1L) "one" else 2L)))
-      }.cached()
-      def key(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toSeq.map {
-        case b: Array[Byte] => b.toSeq
-        case v => v
-      }.toString).sorted
-      (key(res.out.collect()), key(res.errors.collect()), key(res.alerts.collect()))
-    }
-    val fast = run()
-    spark.conf.set("graft.script.internalRow", "false")
-    val slow = try run() finally spark.conf.unset("graft.script.internalRow")
-    assert(fast._1.sameElements(slow._1), "out channel diverged")
-    assert(fast._2.sameElements(slow._2), "error channel diverged")
-    assert(fast._3.sameElements(slow._3), "alert channel diverged")
-    assert(fast._1.length === 2 && fast._2.length === 1 && fast._3.length === 1)
+    val res = ScriptTransform(in, out,
+        onError = ScriptTransform.RouteToErrors(9)) { (r, em, ctx) =>
+      if (r("status") == "bad")
+        throw new IllegalArgumentException("bad status")
+      val info = r("info").asInstanceOf[Map[String, Any]]
+      if (r("id").asInstanceOf[Long] == 3L)
+        em.emitAlert(Map("why" -> "id3"))
+      em.emit(Map(
+        "id" -> r("id"),
+        "x2" -> r("x").asInstanceOf[Double] * 2,
+        "echo" -> r("payload"),
+        "ts" -> r("ts"), "day" -> r("day"),
+        "arr_sum" -> r("arr").asInstanceOf[Seq[Double]].sum,
+        "mk" -> r("m").asInstanceOf[Map[String, Any]].getOrElse("k", -1.0),
+        "a" -> info("a"),
+        "flag" -> (if (r("x").asInstanceOf[Double] > 1) "HIGH" else 0),
+        "u" -> (if (r("id").asInstanceOf[Long] == 1L) "one" else 2L)))
+    }.cached()
+    def key(rs: Array[Row]) = rs.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSet
+    val outRows = res.out.collect()
+    assert(outRows.length === 2)
+    assert(key(outRows) === Set(
+      Seq(1L, 5.0, Seq[Byte](1, 2), Timestamp.valueOf("2026-01-02 03:04:05.000001"),
+        Date.valueOf("2026-01-02"), 3.0, 3.0, 1L, "HIGH", Row(null, "one")),
+      Seq(3L, 1.0, Seq[Byte](9), Timestamp.valueOf("2026-08-17 00:00:00"),
+        Date.valueOf("2026-08-17"), 7.0, 1.0, 3L, "LOW", Row(2L, null))))
+    val errRows = res.errors.collect()
+    assert(errRows.length === 1)
+    assert(key(errRows) === Set(
+      Seq(9, "IllegalArgumentException: bad status", 2L, "bad", -1.0,
+        Seq.empty[Byte], Timestamp.valueOf("1969-12-31 23:59:59.5"),
+        Date.valueOf("1969-12-31"), Seq.empty[Double], Map.empty[String, Double],
+        Row(2L, -1.0))))
+    val alertRows = res.alerts.collect()
+    assert(alertRows.length === 1)
+    assert(key(alertRows) === Set(Seq(Map("why" -> "id3"))))
   }
 
   test("python arrow gate: small partitions speak JSON, big ones arrow, same rows") {
@@ -559,52 +608,58 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         |""".stripMargin
     val small = spark.range(0, 50, 1, 2).toDF("id")
       .withColumn("s", concat(lit("v"), col("id")))
-    val mSmall = Metrics(spark, "proto.arrow")
-    val gotSmall = ProcessScriptTransform.python(small, out, script,
-      metrics = mSmall).out.collect()
-    assert(gotSmall.length === 50)
-    assert(mSmall.value("proto.arrow") === 0,
-      "a plain-schema input must not negotiate arrow by default")
-    // plain schemas opt in via arrowPlainMinRows; rows threshold cleared
-    // mid-partition: arrow engages, rows identical
-    spark.conf.set("graft.pyscript.arrowPlainMinRows", "10")
-    val mBig = Metrics(spark, "proto.arrow")
-    val gotBig = try ProcessScriptTransform.python(small, out, script,
-        metrics = mBig).out.collect()
-      finally spark.conf.unset("graft.pyscript.arrowPlainMinRows")
-    assert(mBig.value("proto.arrow") >= 1,
-      "a partition past the rows threshold must negotiate arrow")
-    def key(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toSeq).toSet
-    assert(key(gotBig) === key(gotSmall))
-    // bytes trigger: wide payloads clear the gate before the row count
-    spark.conf.set("graft.pyscript.arrowPlainMinRows", "10000")
-    spark.conf.set("graft.pyscript.arrowMinBytes", "1024")
-    val mBytes = Metrics(spark, "proto.arrow")
-    val wide = spark.range(0, 50, 1, 2).toDF("id")
-      .withColumn("s", concat(lit("w" * 200), col("id")))
-    val gotBytes = try ProcessScriptTransform.python(wide, out, script,
-        metrics = mBytes).out.collect()
-      finally {
-        spark.conf.unset("graft.pyscript.arrowMinBytes")
-        spark.conf.unset("graft.pyscript.arrowPlainMinRows")
-      }
-    assert(mBytes.value("proto.arrow") >= 1,
-      "a partition past the bytes threshold must negotiate arrow")
-    assert(gotBytes.length === 50)
-    // codec-heavy small input (binary out): still JSON under the default
-    // 65536-row gate — the r16 break-even, not a blanket arrow-on
+    val mPlain = Metrics(spark, "proto.arrow")
+    spark.conf.set("graft.pyscript.arrowMinRows", "10")
+    val gotPlain = try ProcessScriptTransform.python(small, out, script,
+        metrics = mPlain).out.collect()
+      finally spark.conf.unset("graft.pyscript.arrowMinRows")
+    assert(gotPlain.length === 50)
+    assert(mPlain.value("proto.arrow") === 0,
+      "a plain-schema input must never negotiate arrow")
+    // codec-heavy (binary out): the gate decides per partition
     val outB = StructType(Seq(
       StructField("id", LongType), StructField("b", BinaryType)))
     val scriptB =
       """def transform(record, emitter, context):
         |    emitter.emit({"id": record["id"], "b": record["s"].encode()})
         |""".stripMargin
-    val mCodec = Metrics(spark, "proto.arrow")
-    val gotCodec = ProcessScriptTransform.python(small, outB, scriptB,
-      metrics = mCodec).out.collect()
-    assert(gotCodec.length === 50)
-    assert(mCodec.value("proto.arrow") === 0,
+    def key(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }).toSet
+    // a 25-row codec-heavy partition stays on JSON under the default
+    // 65536-row gate — the r16 break-even, not a blanket arrow-on
+    val mSmall = Metrics(spark, "proto.arrow")
+    val gotSmall = ProcessScriptTransform.python(small, outB, scriptB,
+      metrics = mSmall).out.collect()
+    assert(gotSmall.length === 50)
+    assert(mSmall.value("proto.arrow") === 0,
       "a 25-row codec-heavy partition must stay on JSON under the default gate")
+    // rows threshold cleared mid-partition: arrow engages, rows identical
+    spark.conf.set("graft.pyscript.arrowMinRows", "10")
+    val mBig = Metrics(spark, "proto.arrow")
+    val gotBig = try ProcessScriptTransform.python(small, outB, scriptB,
+        metrics = mBig).out.collect()
+      finally spark.conf.unset("graft.pyscript.arrowMinRows")
+    assert(mBig.value("proto.arrow") >= 1,
+      "a partition past the rows threshold must negotiate arrow")
+    assert(key(gotBig) === key(gotSmall))
+    // bytes trigger: wide payloads clear the gate before the row count
+    spark.conf.set("graft.pyscript.arrowMinRows", "10000")
+    spark.conf.set("graft.pyscript.arrowMinBytes", "1024")
+    val mBytes = Metrics(spark, "proto.arrow")
+    val wide = spark.range(0, 50, 1, 2).toDF("id")
+      .withColumn("s", concat(lit("w" * 200), col("id")))
+    val gotBytes = try ProcessScriptTransform.python(wide, outB, scriptB,
+        metrics = mBytes).out.collect()
+      finally {
+        spark.conf.unset("graft.pyscript.arrowMinBytes")
+        spark.conf.unset("graft.pyscript.arrowMinRows")
+      }
+    assert(mBytes.value("proto.arrow") >= 1,
+      "a partition past the bytes threshold must negotiate arrow")
+    assert(gotBytes.length === 50)
   }
 
   test("python scripts may emit pre-encoded wire values (base64 str / ISO str)") {
