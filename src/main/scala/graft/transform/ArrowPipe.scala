@@ -14,23 +14,25 @@ import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
 
 import org.apache.spark.sql.types._
 
-/** Arrow IPC codec for the out-of-process Python transform
-  * ([[ProcessScriptTransform]]): record batches cross the worker pipe as
-  * Arrow stream payloads instead of JSON arrays, eliminating the
-  * per-record json encode/parse on both sides — the dominant tax of the
-  * JSON-frame protocol on any trivial transform at corpus scale. Uses
-  * the Arrow Java runtime Spark already ships (its own pandas-UDF wire)
-  * and pyarrow in the worker; availability is NEGOTIATED at worker init
-  * and the JSON-frame protocol remains the fallback, so semantics never
-  * depend on pyarrow being installed.
+/** Arrow IPC codec and frame helpers for the out-of-process Python
+  * transform ([[ProcessScriptTransform]]). Every message between the
+  * engine and its worker is one frame ([[writeFrame]]/[[readFrame]]):
+  * 'J' frames carry JSON (init, negotiation, JSON record batches,
+  * channel messages, metrics) and 'A' frames carry one Arrow IPC record
+  * batch. Arrow batches skip the per-record json encode/parse on both
+  * sides, the dominant tax of a trivial transform over codec-heavy
+  * records at corpus scale. Uses the Arrow Java runtime Spark already
+  * ships (its own pandas-UDF wire) and pyarrow in the worker;
+  * availability is NEGOTIATED at worker init and JSON batches remain
+  * the fallback, so semantics never depend on pyarrow being installed.
   *
   * Scope: FLAT schemas of scalar wire types (bool/int8..64/float32-64/
   * string/binary/timestamp[µs, tz or ntz]/date). Nested or union-marked
-  * schemas keep the JSON protocol — the hot 100 TB path is flat
-  * records, and the fallback is exercised by the same dual-path specs.
-  * Each frame is a self-contained IPC stream (schema + one batch): a
-  * few hundred bytes of header per 256-record frame buys stateless
-  * framing on both sides.
+  * schemas keep JSON batches — the hot 100 TB path is flat records, and
+  * the fallback is exercised by the same dual-path specs. Each 'A'
+  * payload is a self-contained IPC stream (schema + one batch): a few
+  * hundred bytes of header per `ProcessScriptTransform.ArrowBatchSize`
+  * (4096) record frame buys stateless framing on both sides.
   */
 private[graft] object ArrowPipe {
 
@@ -104,30 +106,20 @@ private[graft] object ArrowPipe {
       s"date value of ${other.getClass}")
   }
 
-  /** Fill `root` (allocated for `schema`) from decoded record maps and
-    * write ONE self-contained IPC stream (schema + the batch). */
-  def writeBatch(records: java.util.List[Map[String, Any]],
-                 schema: StructType, root: VectorSchemaRoot): Array[Byte] =
-    writeBatchBy(records.size(), schema, root,
-      (i, f) => records.get(i).getOrElse(schema.fields(f).name, null))
-
-  /** Row-sourced variant: values come straight off external Rows by
-    * ordinal — no per-record Map materialization on the hot path (the
-    * error channel converts a Row to a map only when a record actually
-    * fails). */
+  /** Fill `root` (allocated for `schema`) from external Rows by ordinal
+    * and write ONE self-contained IPC stream (schema + the batch). No
+    * per-record Map materialization: the error channel converts a Row to
+    * a map only when a record actually fails. */
   def writeBatchRows(records: java.util.List[org.apache.spark.sql.Row],
-                     schema: StructType, root: VectorSchemaRoot): Array[Byte] =
-    writeBatchBy(records.size(), schema, root, (i, f) => records.get(i).get(f))
-
-  private def writeBatchBy(n: Int, schema: StructType, root: VectorSchemaRoot,
-                           value: (Int, Int) => Any): Array[Byte] = {
+                     schema: StructType, root: VectorSchemaRoot): Array[Byte] = {
+    val n = records.size()
     root.allocateNew()
     var f = 0
     while (f < schema.length) {
       val vec = root.getVector(f)
       var i = 0
       while (i < n) {
-        val v = value(i, f)
+        val v = records.get(i).get(f)
         if (v == null) vec.setNull(i)
         else vec match {
           case x: BitVector => x.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
@@ -212,9 +204,8 @@ private[graft] object ArrowPipe {
     out
   }
 
-  /** Framed-binary helpers: 1 type byte ('J' json / 'A' arrow ipc) +
-    * 4-byte big-endian length + payload, both directions once the
-    * worker accepts arrow mode. */
+  /** One frame, both directions and every message: 1 kind byte ('J'
+    * json / 'A' arrow ipc) + 4-byte big-endian length + payload. */
   def writeFrame(out: java.io.OutputStream, kind: Byte,
                  payload: Array[Byte]): Unit = {
     out.write(kind)

@@ -1,6 +1,6 @@
 package graft.transform
 
-import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -15,12 +15,20 @@ import org.apache.spark.sql.types._
   *
   * Re-expressed for Spark's execution model: each `mapPartitions` task
   * spawns one worker process (python3 running [[workerSource]], stdlib
-  * only) and speaks a BATCHED JSON-frame protocol over its stdin/stdout:
-  * records travel in [[BatchSize]]-record array frames and the worker's
-  * channel messages return in buffered array frames (flushed per input
-  * frame, and every [[WorkerFlushEvery]] messages inside one so a
-  * high-fan-out record can't buffer unboundedly). One json encode/parse
-  * and one pipe write per frame replaces the per-record line tax that
+  * only) and speaks ONE framed protocol over its stdin/stdout: every
+  * message, both directions, is a kind byte + 4-byte length + payload
+  * frame ([[ArrowPipe.writeFrame]]). The task sends a JSON init; the
+  * worker always answers `{"t":"proto","arrow":bool}`. Records then
+  * travel as batches — [[BatchSize]]-record JSON arrays, or
+  * [[ArrowBatchSize]]-record Arrow IPC batches when the partition
+  * cleared the Arrow gate and the worker accepted — and the worker's
+  * channel messages return as buffered `{"t":"bb"}` frames (arrow-mode
+  * emits as Arrow frames), flushed per input frame and every
+  * [[WorkerFlushEvery]] messages inside one so a high-fan-out record
+  * can't buffer unboundedly. Successes come back as a run-length
+  * `{"t":"dn","n":k}` marker and a failure as its own `"f"`, so the
+  * task walks one pending cursor over the in-flight Row batches to name
+  * a failing record. Batching replaces the per-record line tax that
   * dominated this path at corpus scale (measured 3-4x on the 2M-doc
   * rehearsal); the script API stays strictly per-record. A dedicated
   * writer thread streams frames in while the task thread reads frames
@@ -44,10 +52,11 @@ import org.apache.spark.sql.types._
   * }}}
   * Channels, error policy, metrics, and the tagged single-pass result are
   * the same [[TransformResult]] the in-process [[ScriptTransform]] path
-  * produces; logger output goes to the executor's stderr log and
-  * per-level counts ride [[Metrics]] like the Scala path's ScriptLogger.
+  * produces; logger and `print()` output go to the executor's stderr
+  * log and per-level log counts ride [[Metrics]] like the Scala path's
+  * ScriptLogger.
   *
-  * Value codec across the JSON boundary: null/boolean/integral/floating/
+  * Value codec of JSON batches: null/boolean/integral/floating/
   * string/array/map/struct (structs travel as JSON objects), plus the
   * reference codec's BYTES and logical datetime types
   * (ref: PythonObjectsEncoder.java:48,126,173): BINARY rides as base64,
@@ -60,16 +69,16 @@ import org.apache.spark.sql.types._
   */
 object ProcessScriptTransform {
 
-  /** Records per input frame. Sized so a frame of typical web documents
+  /** Records per JSON input frame. Sized so a frame of typical web documents
     * stays ~100s of KB (one pipe write, one json parse) while the
     * in-flight queue (1024 records = 4 frames) still backpressures a
     * slow worker. */
   private[transform] val BatchSize = 256
 
-  /** Worker-side response-buffer cap: the emit buffer flushes as a
-    * frame whenever it reaches this many messages, bounding worker
-    * memory even when one record emits millions of rows. */
-  private[transform] val WorkerFlushEvery = 4096
+  /** Worker-side response-buffer cap: buffered emits plus channel
+    * messages flush as frames whenever they reach this many, bounding
+    * worker memory even when one record emits millions of rows. */
+  private[graft] val WorkerFlushEvery = 4096
 
   /** Records per ARROW frame. Arrow's per-frame overhead (IPC schema +
     * stream setup + one pyarrow to_pylist/from_pylist call pair) is
@@ -321,8 +330,9 @@ object ProcessScriptTransform {
         val pb = new ProcessBuilder(pythonExec, "-c", worker)
         env.foreach { case (k, v) => pb.environment().put(k, v) }
         val proc = pb.start()
-        // stderr (script logger output, tracebacks) → executor log; the
-        // last StderrTailLines lines also ride a worker failure's message
+        // stderr (script logger output, print(), tracebacks) → executor
+        // log; the last StderrTailLines lines also ride a worker failure's
+        // message
         val errTail = new java.util.ArrayDeque[String](StderrTailLines)
         val drain = new Thread(() => {
           val r = new BufferedReader(new InputStreamReader(
@@ -341,10 +351,29 @@ object ProcessScriptTransform {
         drain.start()
         val rawOut = proc.getOutputStream
         val rawIn = proc.getInputStream
+        val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+        def fail(why: String): Nothing = {
+          // a dead worker's traceback names the cause: let the drain
+          // read stderr to EOF, then append its tail
+          drain.join(2000)
+          val tail = errTail.synchronized(errTail.toArray.mkString("\n"))
+          val stderr = if (tail.isEmpty) "" else s"\nworker stderr:\n$tail"
+          val cause = writerError.get()
+          if (cause != null) throw new IllegalStateException(
+            s"python worker input stream failed: $cause$stderr", cause)
+          throw new IllegalStateException(why + stderr)
+        }
+        def died(): Nothing = {
+          // stdout EOF can beat the exit status by a moment
+          val exit = if (proc.waitFor(2, java.util.concurrent.TimeUnit.SECONDS))
+            proc.exitValue().toString else "alive"
+          fail(s"python worker died (exit=$exit)")
+        }
+        def readJson(payload: Array[Byte]): java.util.Map[String, Object] =
+          mapper.readValue(payload, classOf[java.util.Map[String, Object]])
 
-        // init is written by the TASK thread (both modes) so arrow-mode
-        // negotiation can read the worker's one-line answer before any
-        // record framing begins
+        // init and negotiation run on the TASK thread: the worker always
+        // answers {"t":"proto","arrow":bool} before any batch is framed
         val init = new java.util.LinkedHashMap[String, Object]()
         init.put("script", script)
         init.put("arguments", JsonCodec.toJava(arguments))
@@ -363,119 +392,66 @@ object ProcessScriptTransform {
           }
           init.put("out_arrow", oa)
         }
-        rawOut.write((mapper.writeValueAsString(init) + "\n")
-          .getBytes(StandardCharsets.UTF_8))
+        ArrowPipe.writeFrame(rawOut, 'J'.toByte, mapper.writeValueAsBytes(init))
         rawOut.flush()
-        // negotiation: the worker answers {"t":"proto","arrow":bool} on
-        // ONE text line iff arrow was offered. Read it byte-wise —
-        // nothing may buffer past the '\n', the framed binary protocol
-        // starts right after it when accepted.
-        val arrowMode = offerArrow && {
-          val sb = new java.lang.StringBuilder()
-          var b = rawIn.read()
-          while (b != -1 && b != '\n') { sb.append(b.toChar); b = rawIn.read() }
-          if (b == -1) false
-          else {
-            val m = mapper.readValue(sb.toString,
-              classOf[java.util.Map[String, Object]])
-            "proto" == m.get("t") &&
-              java.lang.Boolean.TRUE.equals(m.get("arrow"))
-          }
-        }
-        // legacy text-protocol streams (unused in arrow mode)
-        val stdin = if (arrowMode) null else new BufferedWriter(
-          new OutputStreamWriter(rawOut, StandardCharsets.UTF_8))
-        val stdout = if (arrowMode) null else new BufferedReader(
-          new InputStreamReader(rawIn, StandardCharsets.UTF_8))
+        val answer = ArrowPipe.readFrame(rawIn)
+        if (answer == null) died()
+        val proto = readJson(answer._2)
+        if (proto.get("t") != "proto") fail(s"unexpected worker answer $proto")
+        val arrowMode = java.lang.Boolean.TRUE.equals(proto.get("arrow"))
+        val batchRows = if (arrowMode) ArrowBatchSize else BatchSize
 
-        // records the writer has sent whose completion marker ("d"/"f")
-        // the reader has not yet seen — bounded, so a slow worker
-        // backpressures the writer instead of buffering the partition.
-        // Text mode tracks individual record maps; arrow mode tracks
-        // whole Row BATCHES (one queue op per frame instead of per
-        // record, and no per-record Map materialization — the reader
-        // walks a cursor and converts a Row to a map only when a record
-        // actually fails).
-        val pending = new java.util.concurrent.LinkedBlockingQueue[Map[String, Any]](1024)
-        val pendingBatches =
+        // input Row batches the writer has sent whose records the reader
+        // has not yet seen finish ("dn"/"f"). The 4-batch bound (1024
+        // records in JSON mode) backpressures the writer on a slow
+        // worker instead of buffering the partition; a Row becomes a map
+        // only when its record fails.
+        val pending =
           new java.util.concurrent.LinkedBlockingQueue[java.util.ArrayList[Row]](4)
-        val writerError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
         val tc = TaskContext.get()
         val writer = new Thread(() => {
+          val allocator =
+            if (arrowMode) new org.apache.arrow.memory.RootAllocator() else null
+          val root = if (arrowMode) org.apache.arrow.vector.VectorSchemaRoot.create(
+            ArrowPipe.schemaFor(inSchema), allocator) else null
+          // the one input-side fork: how a batch is encoded
+          def encode(batch: java.util.ArrayList[Row]): Array[Byte] =
+            if (arrowMode) ArrowPipe.writeBatchRows(batch, inSchema, root)
+            else {
+              val recs = new java.util.ArrayList[Object](batch.size)
+              batch.forEach { r =>
+                val m = SchemaCodec.rowToMap(r, inSchema)
+                recs.add(JsonCodec.toJava(
+                  if (inDesc == null) m else WireCodec.mapToWire(m, inSchema)))
+              }
+              mapper.writeValueAsBytes(recs)
+            }
           try {
             if (tc != null) org.apache.spark.graft.TaskContextBridge.set(tc)
-            if (arrowMode) {
-              // Arrow framing: one IPC-stream payload per BatchSize
-              // records — no per-record (or per-frame) json encode at
-              // all. `pending` still gains each record BEFORE its frame
-              // is written, so "f"/"dn" markers name records exactly as
-              // in the text protocol.
-              val allocator = new org.apache.arrow.memory.RootAllocator()
-              val root = org.apache.arrow.vector.VectorSchemaRoot.create(
-                ArrowPipe.schemaFor(inSchema), allocator)
-              try {
-                var batch = new java.util.ArrayList[Row](ArrowBatchSize)
-                def writeBatchFrame(): Unit = {
-                  // the reader takes OWNERSHIP of the batch list (its
-                  // pending cursor walks it), so a fresh list replaces
-                  // it instead of clear(); the 4-batch queue bound is
-                  // the in-flight backpressure
-                  pendingBatches.put(batch) // BEFORE the write
-                  val payload = ArrowPipe.writeBatchRows(batch, inSchema, root)
-                  ArrowPipe.writeFrame(rawOut, 'A'.toByte, payload)
-                  rawOut.flush()
-                  batch = new java.util.ArrayList[Row](ArrowBatchSize)
-                }
-                while (rows.hasNext) {
-                  batch.add(rows.next())
-                  if (batch.size >= ArrowBatchSize) writeBatchFrame()
-                }
-                if (!batch.isEmpty) writeBatchFrame()
-                ArrowPipe.writeFrame(rawOut, 'J'.toByte,
-                  "{\"t\":\"end\"}".getBytes(StandardCharsets.UTF_8))
-                rawOut.flush()
-              } finally {
-                try { root.close(); allocator.close() }
-                catch { case _: Throwable => () }
-              }
-            } else {
-              // records travel in BatchSize-array frames: ONE json encode
-              // + one pipe write per frame (the per-record line tax was
-              // the measured bottleneck of this path at corpus scale).
-              // Each record still enters `pending` individually BEFORE its
-              // frame is written, so the reader's per-record "d"/"f"
-              // markers keep naming failing records exactly as before.
-              val batch = new java.util.ArrayList[Object](BatchSize)
-              def writeFrame(): Unit = {
-                val m = new java.util.LinkedHashMap[String, Object]()
-                m.put("t", "rb")
-                m.put("d", batch)
-                stdin.write(mapper.writeValueAsString(m)); stdin.write("\n")
-                // flush per frame (cheap amortized over BatchSize records):
-                // a frame held in the BufferedWriter while the writer
-                // blocks on pending.put would idle the worker
-                stdin.flush()
-                batch.clear()
-              }
-              while (rows.hasNext) {
-                val record = SchemaCodec.rowToMap(rows.next(), inSchema)
-                pending.put(record) // BEFORE the write: reader must find it
-                val wire =
-                  if (inDesc == null) record
-                  else WireCodec.mapToWire(record, inSchema)
-                batch.add(JsonCodec.toJava(wire))
-                if (batch.size >= BatchSize) writeFrame()
-              }
-              if (!batch.isEmpty) writeFrame()
-              val end = new java.util.LinkedHashMap[String, Object]()
-              end.put("t", "end")
-              stdin.write(mapper.writeValueAsString(end)); stdin.write("\n")
-              stdin.flush()
+            var batch = new java.util.ArrayList[Row](batchRows)
+            def send(): Unit = {
+              // the reader takes OWNERSHIP of the list (its pending
+              // cursor walks it), so a fresh list replaces it
+              pending.put(batch) // BEFORE the write: the reader must find it
+              ArrowPipe.writeFrame(rawOut,
+                (if (arrowMode) 'A' else 'J').toByte, encode(batch))
+              rawOut.flush()
+              batch = new java.util.ArrayList[Row](batchRows)
             }
+            while (rows.hasNext) {
+              batch.add(rows.next())
+              if (batch.size >= batchRows) send()
+            }
+            if (!batch.isEmpty) send()
+            rawOut.close() // end of input: the worker sees EOF
           } catch {
             case t: Throwable =>
               writerError.set(t)
               proc.destroyForcibly()
+          } finally {
+            if (root != null)
+              try { root.close(); allocator.close() }
+              catch { case _: Throwable => () }
           }
         }, "graft-pyscript-writer")
         writer.setDaemon(true)
@@ -485,29 +461,12 @@ object ProcessScriptTransform {
         writer.start()
 
         // responses arrive in record order (the worker is sequential);
-        // "d"/"f" markers advance the pending queue so "f" can name the
+        // "dn"/"f" markers advance the pending cursor so "f" can name the
         // record that failed
         new Iterator[Row] {
           private var nextRow: Row = null
           private var finished = false
-          private def fail(why: String): Nothing = {
-            // a dead worker's traceback names the cause: let the drain
-            // read stderr to EOF, then append its tail
-            drain.join(2000)
-            val tail = errTail.synchronized(errTail.toArray.mkString("\n"))
-            val stderr = if (tail.isEmpty) "" else s"\nworker stderr:\n$tail"
-            val cause = writerError.get()
-            if (cause != null) throw new IllegalStateException(
-              s"python worker input stream failed: $cause$stderr", cause)
-            throw new IllegalStateException(why + stderr)
-          }
-          private def died(): Nothing = {
-            // stdout EOF can beat the exit status by a moment
-            val exit = if (proc.waitFor(2, java.util.concurrent.TimeUnit.SECONDS))
-              proc.exitValue().toString else "alive"
-            fail(s"python worker died (exit=$exit)")
-          }
-          // decoded output rows of the current arrow frame (arrow mode)
+          // decoded output rows of the current 'A' frame
           private val rowQ = new java.util.ArrayDeque[Array[Any]]()
           // reader-side allocator for incoming IPC payloads (arrow mode)
           private lazy val readAllocator = {
@@ -517,9 +476,9 @@ object ProcessScriptTransform {
             })
             a
           }
-          // arrow-mode pending cursor over the writer's Row batches:
-          // advance n positions, return the LAST row touched (null only
-          // on a protocol violation — markers never outrun frames)
+          // pending cursor over the writer's Row batches: advance n
+          // positions, return the LAST row touched (null only on a
+          // protocol violation — markers never outrun frames)
           private var curBatch: java.util.ArrayList[Row] = null
           private var curIdx = 0
           private def pendingAdvance(n0: Int): Row = {
@@ -527,7 +486,7 @@ object ProcessScriptTransform {
             var n = n0
             while (n > 0) {
               if (curBatch == null || curIdx >= curBatch.size()) {
-                curBatch = pendingBatches.poll(); curIdx = 0
+                curBatch = pending.poll(); curIdx = 0
                 if (curBatch == null) return null
               }
               last = curBatch.get(curIdx); curIdx += 1; n -= 1
@@ -536,33 +495,21 @@ object ProcessScriptTransform {
           }
           // messages of the current response frame not yet dispatched
           private val frameQ = new java.util.ArrayDeque[java.util.Map[String, Object]]()
-          /** Refill rowQ/frameQ from the next top-level frame (arrow
-            * mode) or line (text mode); top-level non-"bb" messages
-            * enqueue as singletons. */
+          /** Refill rowQ ('A' frame) or frameQ ('J' frame: a "bb" array's
+            * messages, or a top-level message as a singleton). */
           private def readTop(): Unit = {
-            if (arrowMode) {
-              val fr = ArrowPipe.readFrame(rawIn)
-              if (fr == null) died()
-              if (fr._1 == 'A'.toByte) {
-                val rows = ArrowPipe.readBatch(fr._2, outSchema, readAllocator)
-                var i = 0
-                while (i < rows.size()) { rowQ.add(rows.get(i)); i += 1 }
-              } else {
-                val top = mapper.readValue(fr._2,
-                  classOf[java.util.Map[String, Object]])
-                if (top.get("t").asInstanceOf[String] == "bb")
-                  top.get("d").asInstanceOf[java.util.List[Object]].forEach(
-                    m => frameQ.add(m.asInstanceOf[java.util.Map[String, Object]]))
-                else frameQ.add(top)
-              }
+            val fr = ArrowPipe.readFrame(rawIn)
+            if (fr == null) died()
+            if (fr._1 == 'A'.toByte) {
+              val rows = ArrowPipe.readBatch(fr._2, outSchema, readAllocator)
+              var i = 0
+              while (i < rows.size()) { rowQ.add(rows.get(i)); i += 1 }
             } else {
-              val line = stdout.readLine()
-              if (line == null) died()
-              val top = mapper.readValue(line, classOf[java.util.Map[String, Object]])
-              if (top.get("t").asInstanceOf[String] == "bb")
+              val top = readJson(fr._2)
+              if (top.get("t") == "bb")
                 top.get("d").asInstanceOf[java.util.List[Object]].forEach(
                   m => frameQ.add(m.asInstanceOf[java.util.Map[String, Object]]))
-              else frameQ.add(top) // "m" metrics (and any future top-level frame)
+              else frameQ.add(top) // "m" metrics
             }
           }
           private def advance(): Unit = {
@@ -595,29 +542,20 @@ object ProcessScriptTransform {
                   nextRow = channels.alert(
                     JsonCodec.toScala(msg.get("d")).asInstanceOf[Map[String, Any]]
                       .map { case (k, v) => k -> String.valueOf(v) })
-                case "d" =>
-                  if (arrowMode) pendingAdvance(1) else pending.poll()
                 case "dn" =>
-                  // run-length done marker (arrow mode): n consecutive
-                  // successes advance pending in one message
-                  val n = msg.get("n").asInstanceOf[Number].intValue()
-                  if (arrowMode) pendingAdvance(n)
-                  else { var i = n; while (i > 0) { pending.poll(); i -= 1 } }
+                  // run-length done marker: n consecutive successes
+                  pendingAdvance(msg.get("n").asInstanceOf[Number].intValue())
                 case "f" =>
-                  // "f" REPLACES the "d" done-marker for the failing record
-                  // (map conversion only here — the hot path never pays it)
-                  val bad =
-                    if (arrowMode) {
-                      val r = pendingAdvance(1)
-                      if (r == null) null else SchemaCodec.rowToMap(r, inSchema)
-                    } else pending.poll()
+                  // the failing record's own marker (map conversion only
+                  // here — the hot path never pays it)
+                  val r = pendingAdvance(1)
                   val err = String.valueOf(msg.get("m"))
                   onError match {
                     case ScriptTransform.FailFast =>
                       throw new RuntimeException(s"python transform failed: $err")
                     case ScriptTransform.RouteToErrors(code) =>
                       nextRow = channels.error(code, err,
-                        if (bad == null) Map.empty else bad)
+                        if (r == null) Map.empty else SchemaCodec.rowToMap(r, inSchema))
                   }
                 case "m" =>
                   // end-of-stream: fold worker-side metric counts into the
@@ -651,27 +589,32 @@ object ProcessScriptTransform {
     * entry point, emitter with three channels, context with
     * getArguments/getLogger/getMetrics (attribute access works too). */
   private[transform] val workerSource: String =
-    """import sys, json, base64, datetime
+    """import sys, os, json, base64, datetime
       |
-      |# channel messages buffer and leave as ARRAY FRAMES ({"t":"bb",
-      |# "d":[...]}): one json.dumps + one pipe write per frame instead of
-      |# per message. Flushed at the end of every input frame (bounded
-      |# reader latency) and whenever the buffer hits the cap (bounded
-      |# memory however many rows one record emits).
-      |_buf = []
-      |_FLUSH_EVERY = %FLUSH_EVERY%
+      |# One wire both ways: every message is a frame: a kind byte (b"J"
+      |# json, b"A" arrow ipc), a 4-byte big-endian length, the payload.
+      |# Frames own a private copy of the real stdout; fd 1 and sys.stdout
+      |# then point at stderr, so a script's print() (or a child process)
+      |# lands in the executor log instead of on the wire.
+      |_in = sys.stdin.buffer
+      |_out = os.fdopen(os.dup(1), "wb")
+      |os.dup2(2, 1)
+      |sys.stdout = sys.stderr
       |
-      |def _flushbuf():
-      |    if _buf:
-      |        sys.stdout.write(json.dumps({"t": "bb", "d": _buf}))
-      |        sys.stdout.write("\n")
-      |        sys.stdout.flush()
-      |        del _buf[:]
+      |def _read_frame():
+      |    # (kind, payload); (None, None) at end of input
+      |    h = _in.read(5)
+      |    if len(h) < 5:
+      |        return None, None
+      |    return h[0:1], _in.read(int.from_bytes(h[1:5], "big"))
       |
-      |def _w(obj):
-      |    _buf.append(obj)
-      |    if len(_buf) >= _FLUSH_EVERY:
-      |        _flushbuf()
+      |def _write_frame(kind, payload):
+      |    _out.write(kind)
+      |    _out.write(len(payload).to_bytes(4, "big"))
+      |    _out.write(payload)
+      |
+      |def _write_json(msg):
+      |    _write_frame(b"J", json.dumps(msg).encode("utf-8"))
       |
       |def _dec(v, t):
       |    # wire -> script types, driven by the schema descriptor: base64
@@ -729,16 +672,60 @@ object ProcessScriptTransform {
       |    def warn(self, msg): self._log("warn", msg)
       |    def error(self, msg): self._log("error", msg)
       |
+      |# Channel messages buffer in _buf and leave as one {"t":"bb"} frame
+      |# per flush; arrow-mode emits buffer in _ebuf and leave as one "A"
+      |# frame ahead of it. Successes collapse into a run-length
+      |# {"t":"dn","n":k} marker, so a failure's "f" names its record by
+      |# position. Flushed at every input frame's end (bounded reader
+      |# latency) and whenever emits plus messages reach the cap (bounded
+      |# memory however much one record emits).
+      |_buf = []
+      |_ebuf = []
+      |_drun = [0]
+      |_FLUSH_EVERY = %FLUSH_EVERY%
+      |
+      |def _end_run():
+      |    if _drun[0]:
+      |        _buf.append({"t": "dn", "n": _drun[0]})
+      |        _drun[0] = 0
+      |
+      |def _flush():
+      |    if _ebuf:
+      |        try:
+      |            _write_frame(b"A", _arrow_out(_ebuf))
+      |        except Exception:
+      |            # unconvertible emits degrade to json messages
+      |            # (schema-driven _enc), never diverge
+      |            _buf.extend({"t": "e", "d": _enc(r, _out_types)} for r in _ebuf)
+      |        del _ebuf[:]
+      |    _end_run()
+      |    if _buf:
+      |        _write_json({"t": "bb", "d": _buf})
+      |        del _buf[:]
+      |    _out.flush()
+      |
+      |def _bound():
+      |    if len(_buf) + len(_ebuf) >= _FLUSH_EVERY:
+      |        _flush()
+      |
+      |def _msg(m):
+      |    _buf.append(m)
+      |    _bound()
+      |
       |class _Emitter(object):
       |    def emit(self, record):
-      |        _w({"t": "e", "d": _enc(record, _out_types)})
+      |        if _arrow:
+      |            _ebuf.append(record)
+      |            _bound()
+      |        else:
+      |            _msg({"t": "e", "d": _enc(record, _out_types)})
       |    def emitError(self, err):
       |        if _in_types is not None and isinstance(err, dict) \
       |                and isinstance(err.get("invalidRecord"), dict):
       |            err = dict(err)
       |            err["invalidRecord"] = _enc(err["invalidRecord"], _in_types)
-      |        _w({"t": "r", "d": err})
-      |    def emitAlert(self, payload): _w({"t": "a", "d": payload})
+      |        _msg({"t": "r", "d": err})
+      |    def emitAlert(self, payload): _msg({"t": "a", "d": payload})
       |
       |class _Context(object):
       |    def __init__(self, args, lookups):
@@ -754,138 +741,73 @@ object ProcessScriptTransform {
       |        d = self.lookups.get(dataset)
       |        return None if d is None else d.get(str(key))
       |
-      |# read init from the BYTE layer: the text wrapper may buffer past
-      |# the newline, and in arrow mode the bytes after it are binary
-      |# frames that must stay readable from sys.stdin.buffer
-      |_init = json.loads(sys.stdin.buffer.readline())
+      |_init = json.loads(_read_frame()[1])
       |_in_types = _init.get("in_types")
       |_out_types = _init.get("out_types")
+      |
+      |# Negotiation, always answered before any batch: the engine offers
+      |# arrow (flat codec-heavy schemas past the partition gate) and it is
+      |# taken iff pyarrow imports. The script contract is the same either
+      |# way: pyarrow's to_pylist hands the transform real int/float/str/
+      |# bytes/datetime values, as _dec does for json batches.
+      |_arrow = False
+      |if _init.get("arrow"):
+      |    try:
+      |        import pyarrow as _pa
+      |        _arrow = True
+      |    except Exception:
+      |        pass
+      |_write_json({"t": "proto", "arrow": _arrow})
+      |_out.flush()
+      |
+      |# the one fork: how a record batch is decoded, and emits encoded
+      |if _arrow:
+      |    _counts["proto.arrow"] = 1  # observability: negotiated mode
+      |    _KIND = {"bool": _pa.bool_(), "i8": _pa.int8(),
+      |             "i16": _pa.int16(), "i32": _pa.int32(),
+      |             "i64": _pa.int64(), "f32": _pa.float32(),
+      |             "f64": _pa.float64(), "str": _pa.string(),
+      |             "bin": _pa.binary(),
+      |             "ts": _pa.timestamp("us", tz="UTC"),
+      |             "ntz": _pa.timestamp("us"), "date": _pa.date32()}
+      |    _out_pa = _pa.schema([(n, _KIND[k]) for n, k in _init["out_arrow"]])
+      |    def _decode(payload):
+      |        return _pa.ipc.open_stream(payload).read_all().to_pylist()
+      |    def _arrow_out(rows):
+      |        sink = _pa.BufferOutputStream()
+      |        w = _pa.ipc.new_stream(sink, _out_pa)
+      |        w.write_batch(_pa.RecordBatch.from_pylist(rows, schema=_out_pa))
+      |        w.close()
+      |        return sink.getvalue().to_pybytes()
+      |else:
+      |    def _decode(payload):
+      |        return [_dec(r, _in_types) for r in json.loads(payload)]
+      |
       |_ns = {}
       |exec(_init["script"], _ns)
       |_transform = _ns["transform"]
       |_ctx = _Context(_init.get("arguments", {}), _init.get("lookups", {}))
       |_em = _Emitter()
       |
-      |# Arrow negotiation: when the engine OFFERS arrow (flat scalar
-      |# schema), answer with one json line; accepted -> both directions
-      |# switch to framed binary (1 type byte 'J'/'A' + 4-byte big-endian
-      |# length + payload) and record payloads travel as Arrow IPC
-      |# streams — no per-record json encode/parse on either side. The
-      |# script contract is unchanged: pyarrow's to_pylist hands the
-      |# transform real int/float/str/bytes/datetime values (no base64).
-      |if _init.get("arrow"):
-      |    _arrow = False
-      |    try:
-      |        import pyarrow as _pa
-      |        _arrow = True
-      |    except Exception:
-      |        _arrow = False
-      |    sys.stdout.write(json.dumps({"t": "proto", "arrow": _arrow}))
-      |    sys.stdout.write("\n")
-      |    sys.stdout.flush()
-      |    if _arrow:
-      |        _counts["proto.arrow"] = 1  # observability: negotiated mode
-      |        _KIND = {"bool": _pa.bool_(), "i8": _pa.int8(),
-      |                 "i16": _pa.int16(), "i32": _pa.int32(),
-      |                 "i64": _pa.int64(), "f32": _pa.float32(),
-      |                 "f64": _pa.float64(), "str": _pa.string(),
-      |                 "bin": _pa.binary(),
-      |                 "ts": _pa.timestamp("us", tz="UTC"),
-      |                 "ntz": _pa.timestamp("us"), "date": _pa.date32()}
-      |        _out_pa = _pa.schema(
-      |            [(n, _KIND[k]) for n, k in _init["out_arrow"]])
-      |        _ebuf = []      # emitted records awaiting batch conversion
-      |        _drun = [0]     # run length of consecutive "d" markers
-      |        _bin_in = sys.stdin.buffer
-      |        _bin_out = sys.stdout.buffer
-      |        def _write_frame(t, payload):
-      |            _bin_out.write(t)
-      |            _bin_out.write(len(payload).to_bytes(4, "big"))
-      |            _bin_out.write(payload)
-      |        def _ctl(msg):
-      |            # order-sensitive control messages materialize the
-      |            # pending "d" run first, so "f"/"dn" sequence still
-      |            # names records positionally
-      |            if _drun[0]:
-      |                _buf.append({"t": "dn", "n": _drun[0]}); _drun[0] = 0
-      |            _buf.append(msg)
-      |        def _flush_arrow():
-      |            if _ebuf:
-      |                try:
-      |                    _b = _pa.RecordBatch.from_pylist(_ebuf, schema=_out_pa)
-      |                    _sink = _pa.BufferOutputStream()
-      |                    _wr = _pa.ipc.new_stream(_sink, _out_pa)
-      |                    _wr.write_batch(_b); _wr.close()
-      |                    _write_frame(b"A", _sink.getvalue().to_pybytes())
-      |                except Exception:
-      |                    # fallback: unconvertible emits degrade to json
-      |                    # messages (schema-driven _enc), never diverge
-      |                    for _r in _ebuf:
-      |                        _ctl({"t": "e", "d": _enc(_r, _out_types)})
-      |            del _ebuf[:]
-      |            if _drun[0]:
-      |                _buf.append({"t": "dn", "n": _drun[0]}); _drun[0] = 0
-      |            if _buf:
-      |                _write_frame(b"J", json.dumps(
-      |                    {"t": "bb", "d": _buf}).encode("utf-8"))
-      |                del _buf[:]
-      |            _bin_out.flush()
-      |        class _AEmitter(object):
-      |            def emit(self, record):
-      |                _ebuf.append(record)
-      |                if len(_ebuf) >= _FLUSH_EVERY:
-      |                    _flush_arrow()
-      |            def emitError(self, err):
-      |                if _in_types is not None and isinstance(err, dict) \
-      |                        and isinstance(err.get("invalidRecord"), dict):
-      |                    err = dict(err)
-      |                    err["invalidRecord"] = _enc(err["invalidRecord"], _in_types)
-      |                _ctl({"t": "r", "d": err})
-      |            def emitAlert(self, payload): _ctl({"t": "a", "d": payload})
-      |        _em = _AEmitter()
-      |        while True:
-      |            _h = _bin_in.read(5)
-      |            if len(_h) < 5:
-      |                break
-      |            _payload = _bin_in.read(int.from_bytes(_h[1:5], "big"))
-      |            if _h[0:1] == b"J":
-      |                if json.loads(_payload).get("t") == "end":
-      |                    break
-      |                continue
-      |            for _rec in _pa.ipc.open_stream(_payload).read_all().to_pylist():
-      |                try:
-      |                    _transform(_rec, _em, _ctx)
-      |                    _drun[0] += 1
-      |                except Exception as _e:
-      |                    import traceback
-      |                    traceback.print_exc(file=sys.stderr)
-      |                    _ctl({"t": "f", "m": "%s: %s" % (type(_e).__name__, _e)})
-      |            _flush_arrow()  # frame boundary: bound reader latency
-      |        _flush_arrow()
-      |        _write_frame(b"J", json.dumps({"t": "m", "c": _counts}).encode("utf-8"))
-      |        _bin_out.flush()
-      |        sys.exit(0)
-      |
-      |for _line in sys.stdin:
-      |    _msg = json.loads(_line)
-      |    if _msg["t"] == "end":
+      |while True:
+      |    _kind, _payload = _read_frame()
+      |    if _kind is None:
       |        break
-      |    # "rb": a record-batch frame — the per-record script contract
-      |    # is unchanged; only the wire granularity is batched
-      |    for _rec in _msg["d"]:
+      |    # the per-record script contract is unchanged; only the wire
+      |    # granularity is batched
+      |    for _rec in _decode(_payload):
       |        try:
-      |            _transform(_dec(_rec, _in_types), _em, _ctx)
-      |            _w({"t": "d"})
+      |            _transform(_rec, _em, _ctx)
+      |            _drun[0] += 1
       |        except Exception as _e:
       |            import traceback
       |            traceback.print_exc(file=sys.stderr)
-      |            _w({"t": "f", "m": "%s: %s" % (type(_e).__name__, _e)})
-      |    _flushbuf()  # frame boundary: bound reader latency
+      |            _end_run()
+      |            _msg({"t": "f", "m": "%s: %s" % (type(_e).__name__, _e)})
+      |    _flush()  # frame boundary: bound reader latency
       |
-      |_flushbuf()
-      |sys.stdout.write(json.dumps({"t": "m", "c": _counts}))
-      |sys.stdout.write("\n")
-      |sys.stdout.flush()
+      |_write_json({"t": "m", "c": _counts})
+      |_out.flush()
       |""".stripMargin
       .replace("%FLUSH_EVERY%", WorkerFlushEvery.toString)
 }

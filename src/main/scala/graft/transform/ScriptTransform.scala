@@ -138,11 +138,13 @@ private[transform] final class TaggedChannels(inSchema: StructType,
     TransformResult(tagged, outSchema, errSchema)
 }
 
-/** Imperative record-at-a-time transform — the engine's fully-general path,
-  * equivalent to the reference's Native execution mode (out-of-process
-  * script, ref: Py4jPythonExecutor.java) re-expressed as a distributed
-  * `mapPartitions`: the user closure runs once per record on executors, no
-  * driver round-trip, linear scale-out. Prefer the declarative
+/** Imperative record-at-a-time transform over a JVM closure — the
+  * engine's fully-general in-process path. The reference's Native
+  * execution mode (out-of-process Python, ref: Py4jPythonExecutor.java)
+  * is [[ProcessScriptTransform.python]]; this path offers the same
+  * `transform(record, emitter, context)` shape to Scala code as a
+  * distributed `mapPartitions`: the closure runs once per record on
+  * executors, no driver round-trip, linear scale-out. Prefer the declarative
   * [[Dsl]] path (whole-stage codegen) when the transform is expressible as
   * column expressions; this path costs one serialization boundary.
   */

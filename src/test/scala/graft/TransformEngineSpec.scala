@@ -662,6 +662,119 @@ class TransformEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gotBytes.length === 50)
   }
 
+  /** Runs `f` with the Arrow gate at one row (`arrow = true`, every
+    * codec-heavy partition offers Arrow) or at its default (`false`);
+    * returns the result and the workers' `proto.arrow` count, so `f`
+    * must run its workers. */
+  private def underGate[T](arrow: Boolean)(f: Metrics => T): (T, Long) = {
+    val m = Metrics(spark, "proto.arrow")
+    if (arrow) spark.conf.set("graft.pyscript.arrowMinRows", "1")
+    val r = try f(m) finally spark.conf.unset("graft.pyscript.arrowMinRows")
+    (r, m.value("proto.arrow"))
+  }
+
+  test("python print() goes to the executor log, not the wire, in both modes") {
+    // the worker's stdout carries frames; a script printing on every
+    // record (and at import) must corrupt neither a JSON frame nor an
+    // Arrow frame header
+    val plain = spark.range(0, 40, 1, 2).toDF("id")
+    val codec = plain.withColumn("b", concat(lit("p"), col("id")).cast("binary"))
+    val script =
+      """print("loading")
+        |def transform(record, emitter, context):
+        |    print("debug", record["id"])
+        |    emitter.emit(record)
+        |""".stripMargin
+    val (json, jsonArrow) = underGate(arrow = false) { m =>
+      ProcessScriptTransform.python(plain, plain.schema, script, metrics = m)
+        .out.collect().map(_.getLong(0)).toSet
+    }
+    assert(jsonArrow === 0)
+    assert(json === (0L until 40L).toSet)
+    val (arrow, arrowArrow) = underGate(arrow = true) { m =>
+      ProcessScriptTransform.python(codec, codec.schema, script, metrics = m)
+        .out.collect().map(r => (r.getLong(0), new String(r.getAs[Array[Byte]](1), "UTF-8")))
+        .toSet
+    }
+    assert(arrowArrow >= 1, "the codec-heavy run did not negotiate arrow")
+    assert(arrow === (0L until 40L).map(i => (i, s"p$i")).toSet)
+  }
+
+  test("python worker: one record emitting 2 x WorkerFlushEvery + 1 per channel, exact counts in both modes") {
+    // the worker flushes whenever buffered emits plus channel messages
+    // reach WorkerFlushEvery; no message may be lost or duplicated
+    // across those mid-record flushes, in either mode
+    val n = 2 * ProcessScriptTransform.WorkerFlushEvery + 1
+    val script =
+      """def transform(record, emitter, context):
+        |    for i in range(int(context.getArguments()["n"])):
+        |        out = {"id": i}
+        |        if "b" in record:
+        |            out["b"] = b"x%d" % i
+        |        emitter.emit(out)
+        |        emitter.emitAlert({"i": str(i)})
+        |        emitter.emitError({"errorCode": 9, "errorMsg": "e%d" % i,
+        |                           "invalidRecord": record})
+        |""".stripMargin
+    val plain = spark.range(0, 1, 1, 1).toDF("id")
+    val codec = plain.withColumn("b", lit("in").cast("binary"))
+    for ((in, arrow) <- Seq(plain -> false, codec -> true)) {
+      val (r, proto) = underGate(arrow) { m =>
+        val res = ProcessScriptTransform.python(in, in.schema, script,
+          arguments = Map("n" -> n.toString), metrics = m).cached()
+        res.tagged.count() // run the workers once, inside the gate
+        res
+      }
+      assert(proto === (if (arrow) 1 else 0))
+      val out = r.out.collect()
+      assert(out.length === n)
+      assert(out.map(_.getLong(0)).toSet === (0L until n.toLong).toSet)
+      assert(r.alerts.count() === n)
+      val errs = r.errors.collect()
+      assert(errs.length === n)
+      assert(errs.map(_.getAs[String]("errorMsg")).toSet ===
+        (0 until n).map(i => s"e$i").toSet)
+      assert(errs.forall(_.getAs[Long]("id") == 0L))
+    }
+  }
+
+  test("python failures keep their own records across frame boundaries, both modes") {
+    // failures straddle both batch sizes (JSON 256, Arrow 4096) and end
+    // the partition: each error row must carry ITS failing record, which
+    // pins the pending cursor and the run-length done markers
+    val failAt = Seq(255L, 256L, 257L, 4095L, 4096L, 8999L)
+    val in = spark.range(0, 9000, 1, 1).toDF("id")
+      .withColumn("b", col("id").cast("string").cast("binary"))
+    val script =
+      s"""FAIL = {${failAt.mkString(", ")}}
+         |def transform(record, emitter, context):
+         |    if record["id"] in FAIL:
+         |        raise ValueError("boom %d" % record["id"])
+         |    emitter.emit(record)
+         |""".stripMargin
+    for (arrow <- Seq(false, true)) {
+      val (r, proto) = underGate(arrow) { m =>
+        val res = ProcessScriptTransform.python(in, in.schema, script, metrics = m,
+          onError = ScriptTransform.RouteToErrors(11)).cached()
+        res.tagged.count()
+        res
+      }
+      assert(proto === (if (arrow) 1 else 0))
+      val errs = r.errors.collect()
+      assert(errs.map(_.getAs[Long]("id")).sorted.toSeq === failAt)
+      errs.foreach { e =>
+        val id = e.getAs[Long]("id")
+        assert(e.getAs[String]("errorMsg") === s"ValueError: boom $id")
+        assert(new String(e.getAs[Array[Byte]]("b"), "UTF-8") === id.toString)
+        assert(e.getAs[Int]("errorCode") === 11)
+      }
+      val out = r.out.collect()
+      assert(out.length === 9000 - failAt.length)
+      assert(out.forall(o => new String(o.getAs[Array[Byte]]("b"), "UTF-8") ==
+        o.getLong(0).toString))
+    }
+  }
+
   test("python scripts may emit pre-encoded wire values (base64 str / ISO str)") {
     import java.sql.Timestamp
     // the worker's _enc passes strings through untouched, so a script
